@@ -168,7 +168,7 @@ object ScaleProbe {
     "ml_pr_curve",
     // Brier: one knob agg + one moment scan — t2's map-only slope
     "ml_brier",
-    // gains/lift: one globalRankRows range sort + a 10-cell decile agg
+    // gains/lift: one Ranks.scan range sort + a 10-cell decile agg
     // — the sc4 range-sort slope
     "ml_lift_gains",
     // Spearman: two (type-table prefix + value-keyed join-back) passes
@@ -315,7 +315,7 @@ object ScaleProbe {
     // bijective vocab rename keeps cross-copy grams disjoint, so the
     // reference gram table grows linearly like a real corpus's)
     "t25_ngram_novelty",
-    // NDCG: two globalRankRows range sorts + 1-row aggs — the sc4
+    // NDCG: two Ranks.scan range sorts + 1-row aggs — the sc4
     // range-sort slope (the ml_lift_gains shape, twice)
     "ml_ndcg",
     // bloom dedup: one partial-agg sketch pass over history + a map-only
@@ -330,7 +330,7 @@ object ScaleProbe {
     "u6_snapshot_diff",
     // text normalization: map-only regex scan — t2's slope
     "t26_text_normalize",
-    // hybrid RRF: two globalRank range-sorts (the sc4 shape) + a
+    // hybrid RRF: two Ranks.scan range-sorts (the sc4 shape) + a
     // |docs|-scale outer join + TakeOrdered — the sc4 slope
     "n11_hybrid_rrf",
     // power iteration: map-only matvec + one (pos)-keyed partial agg —
@@ -361,7 +361,7 @@ object ScaleProbe {
     // index build out of the measured pass (the d9/gbt accounting) — the
     // timed region is the append slice's assignment + cached union
     "n8_ann_incremental_assign",
-    // 2-D skyline: distinct-price collapse + the globalPrefixMax sweep
+    // 2-D skyline: distinct-price collapse + the Ranks.scan MaxBefore sweep
     // (range sort over the price domain, which the replica holds FIXED —
     // price values repeat across copies) — expect the sub-linear
     // bounded-domain slope of stats_mannwhitney

@@ -170,14 +170,17 @@ object Num {
     * from; SQL twin: `CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT)`. */
   def cents(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
     (c.cast(DecimalType(18, 2)) * 100).cast("long")
+
+  /** Column `name` cast to `t`, non-nullable, raising on a null row: the
+    * contract of a primitive-typed decode such as `.as[(Long, Double)]`,
+    * which the (key, value) rank frames' output schemas still carry. */
+  def required(name: String, t: DataType): org.apache.spark.sql.Column = {
+    import org.apache.spark.sql.GraftSqlShim.{column, expression}
+    column(org.apache.spark.sql.catalyst.expressions.objects.AssertNotNull(
+      expression(col(name).cast(t)))).as(name)
+  }
 }
 
-/** Scalable global total-order rank shared by sc4_global_rank and
-  * c5_quantile_bins: `orderBy` range-partitions + locally sorts (the
-  * scalable total sort), then `zipWithIndex` assigns contiguous 1-based
-  * ranks partition-by-partition — never a single-partition Window. Order
-  * must be pinned by a unique (value, key) pair so ranks are deterministic
-  * regardless of sampled range boundaries. */
 /** Driver-side concurrency for independent job-submitting builds. */
 object Par {
   /** Evaluates two independent builds on FRESH threads so any Spark jobs
@@ -204,181 +207,109 @@ object Par {
 
 object Ranks {
   import org.apache.spark.sql.{Column, DataFrame}
+  import org.apache.spark.sql.catalyst.InternalRow
+  import org.apache.spark.sql.catalyst.expressions.{JoinedRow, SpecificInternalRow}
 
-  /** df must expose exactly (key: Long, v: Double) under `keyCol`/`valCol`;
-    * returns (keyCol, valCol, rankCol) ranked 1..n in `order`. */
-  def globalRank(df: DataFrame, keyCol: String, valCol: String,
-      rankCol: String, order: Seq[Column]): DataFrame = {
-    val s = df.sparkSession
-    import s.implicits._
-    df.select(col(keyCol), col(valCol))
-      .orderBy(order: _*)
-      .as[(Long, Double)]
-      .rdd.zipWithIndex()
-      .map { case ((k, v), i) => (k, v, i + 1) }
-      .toDF(keyCol, valCol, rankCol)
-  }
+  /** What [[scan]] carries along the order. The set is closed: every
+    * global rank or cumulative column in the engine is one of these. */
+  sealed trait Carry
+  /** 1-based contiguous row number: the running sum of an implicit 1. */
+  case object Rank extends Carry
+  /** Inclusive running sum of each LongType column. */
+  final case class Sum(cols: String*) extends Carry
+  /** Running max of a LongType column over the STRICTLY preceding rows,
+    * null on the first row (the 2-D skyline sweep). */
+  final case class MaxBefore(col: String) extends Carry
 
-  /** Row-preserving variant: appends 1-based contiguous `rankCol` to ALL
-    * of df's columns under the total order `order` — the same
-    * range-partitioned sort + zipWithIndex shape for frames that need
-    * more than a (key, value) pair (the ml_* fold queries), replacing
-    * the single-partition `row_number() OVER (ORDER BY …)` funnel. Like
-    * globalRank, zipWithIndex runs its partition-offset job at
-    * construction. */
-  def globalRankRows(df: DataFrame, rankCol: String, order: Seq[Column]): DataFrame =
-    globalRankRowsWithTotal(df, rankCol, order)._1
-
-  /** [[globalRankRows]] exposing the TOTAL row count (r12): zipWithIndex's
-    * partition-offset job already counts every partition, so a caller that
-    * needs n (fold geometry, prefix sizing) was paying a second full-scan
-    * count action for a number this construction had just computed. Same
-    * two-evaluation determinism contract as globalPrefixSum: the seeded
-    * range sampler partitions both passes identically when `order` is a
-    * total order. */
-  def globalRankRowsWithTotal(df: DataFrame, rankCol: String,
-      order: Seq[Column]): (DataFrame, Long) = {
-    val s = df.sparkSession
-    val sorted = df.orderBy(order: _*)
-    val schema = sorted.schema.add(rankCol, org.apache.spark.sql.types.LongType,
-      nullable = false)
-    val rdd0 = sorted.rdd
-    val counts = rdd0.mapPartitionsWithIndex { (i, it) =>
-      var c = 0L; it.foreach(_ => c += 1); Iterator.single((i, c))
-    }.collect().sortBy(_._1).map(_._2)
-    val offsets = counts.scanLeft(0L)(_ + _)
-    val rdd = rdd0.mapPartitionsWithIndex { (i, it) =>
-      var k = offsets(i)
-      it.map { row => k += 1; org.apache.spark.sql.Row.fromSeq(row.toSeq :+ k) }
-    }
-    (s.createDataFrame(rdd, schema), offsets.last)
-  }
-
-  /** Appends the running total of `valCol` (LongType) under the global
-    * total order `order` — the distributed scan primitive: range-
-    * partitioned sort, one pass collecting per-partition subtotals
-    * (numPartitions longs on the driver — the zipWithIndex accounting),
-    * exclusive offsets broadcast, then a map-only second pass. Replaces
-    * the single-partition `sum() OVER (ORDER BY …)` funnel the same way
-    * globalRank replaces the row_number one. `order` must be a total
-    * order or per-partition re-evaluation could disagree with the
-    * subtotal pass (Spark's range sampler is seeded, so equal-key
-    * placement is deterministic only when keys aren't equal). */
-  def globalPrefixSum(df: DataFrame, valCol: String, order: Seq[Column],
-      cumCol: String): DataFrame =
-    globalPrefixSumWithTotal(df, valCol, order, cumCol)._1
-
-  /** Appends the running MAX of `valCol` (LongType) over all STRICTLY
-    * PRECEDING rows under the global total order `order` — null for the
-    * global first row. Same two-pass shape as [[globalPrefixSum]]:
-    * range-partitioned sort, per-partition maxima collected (numPartitions
-    * longs), exclusive prefix-maxima broadcast, map-only second pass. This
-    * is the distributed sweep primitive behind the 2-D skyline
-    * (o4_skyline): max is associative, so the per-partition offset trick
-    * applies exactly as it does for sums, and no single-partition
-    * `max() OVER (ORDER BY …)` funnel ever materializes. */
-  def globalPrefixMaxExclusive(df: DataFrame, valCol: String,
-      order: Seq[Column], cumCol: String): DataFrame = {
-    val s = df.sparkSession
-    val sorted = df.orderBy(order: _*)
-    val idx = sorted.schema.fieldIndex(valCol)
-    val rdd = sorted.rdd
-    val partMax = rdd.mapPartitionsWithIndex { (i, it) =>
-      var acc = Long.MinValue
-      var any = false
-      it.foreach { r => any = true; acc = math.max(acc, r.getLong(idx)) }
-      Iterator.single((i, if (any) Some(acc) else None))
-    }.collect().sortBy(_._1).map(_._2)
-    // exclusive prefix-max of the per-partition maxima
-    val offsets = partMax.scanLeft(Option.empty[Long]) { (a, b) =>
-      (a, b) match {
-        case (Some(x), Some(y)) => Some(math.max(x, y))
-        case (x, None)          => x
-        case (None, y)          => y
+  /** The carry as a fold over internal rows. State is the k running
+    * values plus the row count, so an empty partition leaves a max
+    * undefined; sums use `addExact`, so a wrap raises even with ANSI off.
+    * `slots` index the LongType inputs, -1 being a rank's implicit 1. */
+  private final case class Fold(slots: Array[Int], max: Boolean) {
+    val k: Int = slots.length
+    def zero: Array[Long] = new Array[Long](k + 1)
+    def step(acc: Array[Long], r: InternalRow): Unit = {
+      var j = 0
+      while (j < k) {
+        val i = slots(j)
+        if (i >= 0 && r.isNullAt(i))
+          throw new NullPointerException(s"Ranks.scan: null in input column $i")
+        val v = if (i < 0) 1L else r.getLong(i)
+        acc(j) = if (!max) Math.addExact(acc(j), v)
+          else if (acc(k) == 0) v else math.max(acc(j), v)
+        j += 1
       }
-    }.init // scanLeft yields n+1 entries; entry i = max over partitions [0,i)
-    val bc = s.sparkContext.broadcast(offsets)
-    val schema = sorted.schema.add(cumCol, org.apache.spark.sql.types.LongType,
-      nullable = true)
-    val out = rdd.mapPartitionsWithIndex { (i, it) =>
-      var acc = bc.value(i)
+      acc(k) += 1
+    }
+    def merge(a: Array[Long], b: Array[Long]): Array[Long] =
+      if (max && a(k) == 0) b
+      else if (max && b(k) == 0) a
+      else Array.tabulate(k + 1) { j =>
+        if (j == k) a(k) + b(k)
+        else if (max) math.max(a(j), b(j))
+        else Math.addExact(a(j), b(j))
+      }
+    def total(s: Array[Long]): Seq[Long] =
+      if (max && s(k) == 0) Nil else s.take(k).toSeq
+  }
+
+  /** Appends `carry` under the global total order `order` as `outCols`
+    * (one per carried value; LongType, nullable only for [[MaxBefore]])
+    * and returns the carry past the last row: the row count, the grand
+    * sums, or the max (Nil on an empty frame). Never a single-partition
+    * `OVER (ORDER BY …)` funnel: `order` range-partitions and locally
+    * sorts, one job folds each partition to its subtotal (numPartitions
+    * small arrays on the driver), and a map pass inside the caller's
+    * action resumes each partition from the exclusive scan of those
+    * subtotals. Both passes read one `toRdd`, so they share the sort's
+    * shuffle, and rows stay internal: the carry rides a [[JoinedRow]].
+    * `order` must be a total order, or equal keys could land differently
+    * in the two passes. On a single range partition every start is zero,
+    * so the subtotal job runs only if the caller reads the totals. */
+  def scan(df: DataFrame, order: Seq[Column], carry: Carry,
+      outCols: Seq[String]): (DataFrame, Seq[Long]) = {
+    val sorted = df.orderBy(order: _*)
+    val in = sorted.schema
+    def longAt(c: String): Int = {
+      val i = in.fieldIndex(c)
+      require(in(i).dataType == LongType, s"Ranks.scan: $c is ${in(i).dataType}, not bigint")
+      i
+    }
+    val fold = carry match {
+      case Rank         => Fold(Array(-1), max = false)
+      case Sum(cs @ _*) => Fold(cs.map(longAt).toArray, max = false)
+      case MaxBefore(c) => Fold(Array(longAt(c)), max = true)
+    }
+    val k = fold.k
+    require(outCols.size == k, s"Ranks.scan: $carry carries $k values, got $outCols")
+    val rows = sorted.queryExecution.toRdd
+    lazy val subtotals = rows.mapPartitions { it =>
+      val acc = fold.zero
+      it.foreach(fold.step(acc, _))
+      Iterator.single(acc)
+    }.collect()
+    val starts =
+      if (rows.getNumPartitions <= 1) Array(fold.zero)
+      else subtotals.scanLeft(fold.zero)(fold.merge)
+    val out = rows.mapPartitionsWithIndex[InternalRow] { (p, it) =>
+      val acc = starts(p).clone()
+      val c = new SpecificInternalRow(Seq.fill(k)(LongType))
+      val joined = new JoinedRow()
       it.map { r =>
-        val prev = acc
-        val v = r.getLong(idx)
-        acc = Some(acc.fold(v)(math.max(_, v)))
-        org.apache.spark.sql.Row.fromSeq(r.toSeq :+ prev.map(Long.box).orNull)
+        if (fold.max) {
+          if (acc(k) == 0) c.setNullAt(0) else c.setLong(0, acc(0))
+          fold.step(acc, r)
+        } else {
+          fold.step(acc, r)
+          var j = 0
+          while (j < k) { c.setLong(j, acc(j)); j += 1 }
+        }
+        joined(r, c)
       }
     }
-    s.createDataFrame(out, schema)
-  }
-
-  /** Multi-column [[globalPrefixSum]]: appends the running total of EACH
-    * of `valCols` (all LongType) under the one global order — the same
-    * two-pass shape (per-partition subtotal VECTORS collected, exclusive
-    * offset vectors broadcast, map-only second pass), paying ONE sort for
-    * k cumulative columns instead of k sorts. Returns the frame plus the
-    * grand totals, in `valCols` order (free from the subtotal pass — a
-    * caller needing them as scalars reads them here instead of paying a
-    * separate aggregation job). Used by c3_ks_drift, whose two-cohort KS
-    * scan needs both CDFs under the same value order. */
-  def globalPrefixSums(df: DataFrame, valCols: Seq[String],
-      order: Seq[Column], cumCols: Seq[String]): (DataFrame, Seq[Long]) = {
-    require(valCols.size == cumCols.size)
-    val s = df.sparkSession
-    val sorted = df.orderBy(order: _*)
-    val idxs = valCols.map(sorted.schema.fieldIndex).toArray
-    val k = idxs.length
-    val rdd = sorted.rdd
-    val partSums = rdd.mapPartitionsWithIndex { (i, it) =>
-      val acc = new Array[Long](k)
-      it.foreach { r =>
-        var j = 0
-        while (j < k) { acc(j) += r.getLong(idxs(j)); j += 1 }
-      }
-      Iterator.single((i, acc))
-    }.collect().sortBy(_._1).map(_._2)
-    val offsets = partSums.scanLeft(new Array[Long](k)) { (a, b) =>
-      Array.tabulate(k)(j => a(j) + b(j))
-    }
-    val bc = s.sparkContext.broadcast(offsets)
-    val schema = cumCols.foldLeft(sorted.schema)(
-      (sc, c) => sc.add(c, org.apache.spark.sql.types.LongType, nullable = false))
-    val out = rdd.mapPartitionsWithIndex { (i, it) =>
-      val acc = bc.value(i).clone()
-      it.map { r =>
-        var j = 0
-        while (j < k) { acc(j) += r.getLong(idxs(j)); j += 1 }
-        org.apache.spark.sql.Row.fromSeq(r.toSeq ++ acc.toSeq)
-      }
-    }
-    (s.createDataFrame(out, schema), offsets.last.toSeq)
-  }
-
-  /** [[globalPrefixSum]] plus the grand total, which the subtotal pass
-    * already computed (offsets.last) — callers needing the corpus total
-    * (e.g. a budget knob) read it here instead of paying another scan. */
-  def globalPrefixSumWithTotal(df: DataFrame, valCol: String,
-      order: Seq[Column], cumCol: String): (DataFrame, Long) = {
-    val s = df.sparkSession
-    val sorted = df.orderBy(order: _*)
-    val idx = sorted.schema.fieldIndex(valCol)
-    val rdd = sorted.rdd
-    val partSums = rdd.mapPartitionsWithIndex { (i, it) =>
-      var acc = 0L
-      it.foreach(r => acc += r.getLong(idx))
-      Iterator.single((i, acc))
-    }.collect().sortBy(_._1).map(_._2)
-    val offsets = partSums.scanLeft(0L)(_ + _)
-    val bc = s.sparkContext.broadcast(offsets)
-    val schema = sorted.schema.add(cumCol, org.apache.spark.sql.types.LongType,
-      nullable = false)
-    val out = rdd.mapPartitionsWithIndex { (i, it) =>
-      var acc = bc.value(i)
-      it.map { r =>
-        acc += r.getLong(idx)
-        org.apache.spark.sql.Row.fromSeq(r.toSeq :+ acc)
-      }
-    }
-    (s.createDataFrame(out, schema), offsets.last)
+    val schema = outCols.foldLeft(in)(_.add(_, LongType, nullable = fold.max))
+    val totals =
+      LazyList(()).flatMap(_ => fold.total(subtotals.foldLeft(fold.zero)(fold.merge)))
+    (org.apache.spark.sql.GraftSqlShim.ofInternalRows(df.sparkSession, out, schema), totals)
   }
 }

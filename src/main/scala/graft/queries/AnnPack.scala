@@ -2,7 +2,8 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.{Num, QueryPack, Tables}
+import org.apache.spark.sql.types.{DoubleType, LongType}
+import graft.{Num, QueryPack, Ranks, Tables}
 import graft.ann.Similarity
 
 /** Approximate-nearest-neighbor search over `embeddings` (builder-prompt
@@ -550,18 +551,20 @@ object AnnPack extends QueryPack {
     // ranks every matching document; the dense leg ranks only docs that
     // HAVE an embedding (at sf0.1, 2000 of 5000) — the FULL OUTER fuse
     // keeps single-leg docs with the other leg contributing 0. Both legs
-    // rank via Ranks.globalRank (range-partitioned sort + zipWithIndex —
-    // never a one-task window); the RRF term 1/(60+r) is computed as
-    // EXACT rounded integer division at e12 so the fused ordering can't
-    // move with engine FP; top-20 rides TakeOrderedAndProject.
+    // rank via Ranks.scan (range-partitioned sort + per-partition row
+    // counts — never a one-task window); the RRF term 1/(60+r) is
+    // computed as EXACT rounded integer division at e12 so the fused
+    // ordering can't move with engine FP; top-20 rides
+    // TakeOrderedAndProject.
     "n11_hybrid_rrf" -> ((s, dir) => {
       val lexScore = Tables.documents(s, dir)
         .select(col("doc_id"), size(filter(
           split(trim(col("text")), "\\s+"),
           w => w.isin("join", "hash", "scan"))).cast("double").as("v"))
         .filter(col("v") > 0)
-      val lexr = graft.Ranks.globalRank(lexScore, "doc_id", "v", "r_lex",
-        Seq(col("v").desc, col("doc_id")))
+      val lexr = Ranks.scan(lexScore.select(Num.required("doc_id", LongType),
+          Num.required("v", DoubleType)),
+        Seq(col("v").desc, col("doc_id")), Ranks.Rank, Seq("r_lex"))._1
         .select(col("doc_id"), col("r_lex"))
       val e = Tables.embeddings(s, dir)
       val probe = e.filter(col("vec_id") === 0)
@@ -569,8 +572,9 @@ object AnnPack extends QueryPack {
       val semScore = e.crossJoin(broadcast(probe))
         .select(col("vec_id"),
           Num.r6(Similarity.cosine(col("embedding"), col("p_emb"))).as("v"))
-      val semr = graft.Ranks.globalRank(semScore, "vec_id", "v", "r_sem",
-        Seq(col("v").desc, col("vec_id")))
+      val semr = Ranks.scan(semScore.select(Num.required("vec_id", LongType),
+          Num.required("v", DoubleType)),
+        Seq(col("v").desc, col("vec_id")), Ranks.Rank, Seq("r_sem"))._1
         .select(col("vec_id"), col("r_sem"))
       lexr.join(semr, lexr("doc_id") === semr("vec_id"), "full_outer")
         .select(coalesce(col("doc_id"), col("vec_id")).as("doc_id"),

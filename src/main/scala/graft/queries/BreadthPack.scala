@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
+import org.apache.spark.sql.types.{DecimalType, DoubleType, LongType}
 import graft.{Num, QueryPack, Tables}
 import graft.functions.GeoMean
 
@@ -113,16 +113,18 @@ object BreadthPack extends QueryPack {
       existing.unionByName(appended)
     }),
 
-    // Global total-order rank WITHOUT a single-partition window: orderBy
-    // range-partitions + locally sorts (the scalable total sort), then
-    // zipWithIndex assigns contiguous indices partition-by-partition —
-    // order is pinned by (price desc, key), so ranks are deterministic
-    // regardless of sampled range boundaries. A Window over no partition
-    // key would funnel 100 TB through one task; this never does.
+    // Global total-order rank WITHOUT a single-partition window: the
+    // Ranks.scan range sort, then contiguous ranks resumed partition by
+    // partition from per-partition row counts — order is pinned by
+    // (price desc, key), so ranks are deterministic regardless of sampled
+    // range boundaries. A Window over no partition key would funnel
+    // 100 TB through one task; this never does.
     "sc4_global_rank" -> ((s, dir) =>
-      graft.Ranks.globalRank(
-        Tables.orders(s, dir), "o_orderkey", "o_totalprice", "global_rank",
-        Seq(col("o_totalprice").desc, col("o_orderkey").asc))),
+      graft.Ranks.scan(
+        Tables.orders(s, dir).select(Num.required("o_orderkey", LongType),
+          Num.required("o_totalprice", DoubleType)),
+        Seq(col("o_totalprice").desc, col("o_orderkey").asc),
+        graft.Ranks.Rank, Seq("global_rank"))._1),
 
     // Bigram frequency over documents: generator-expression n-grams,
     // explode, one count shuffle, pinned top-20.

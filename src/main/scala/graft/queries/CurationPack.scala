@@ -2,7 +2,8 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.{Num, QueryPack, Tables}
+import org.apache.spark.sql.types.{DoubleType, LongType}
+import graft.{Num, QueryPack, Ranks, Tables}
 
 /** Training-data curation operators the reference pipeline implies but never
   * names: deterministic split assignment, PII redaction, distribution-drift
@@ -231,12 +232,12 @@ object CurationPack extends QueryPack {
     // EXACT integer arithmetic: with per-value counts c1/c2 and totals
     // n1/n2, D = max |F1·n2 − F2·n1| / (n1·n2); numerator and denominator
     // are BIGINTs, so the statistic is engine-independent to the last bit.
-    // One agg shuffle, then BOTH cumulative CDFs in a single
-    // Ranks.globalPrefixSums pass (range-partitioned sort + broadcast
-    // offset vectors) — never a single-partition `sum() OVER (ORDER BY)`
-    // funnel, the same distributed-scan primitive the stats family uses
-    // (VERDICT r10 next #3). The cohort totals fall out of the subtotal
-    // pass as driver scalars (two longs).
+    // One agg shuffle, then BOTH cumulative CDFs in a single two-column
+    // Ranks.scan Sum pass (range-partitioned sort + per-partition
+    // subtotal vectors) — never a single-partition `sum() OVER (ORDER BY)`
+    // funnel, the same distributed-scan primitive the stats family uses.
+    // The cohort totals fall out of the subtotal pass as driver scalars
+    // (two longs).
     "c3_ks_drift" -> ((s, dir) => {
       val v = graft.Num.cents(col("value"))
       val per = Tables.events(s, dir)
@@ -245,9 +246,8 @@ object CurationPack extends QueryPack {
         .agg(
           sum(when(col("event_type") === "click", 1L).otherwise(0L)).as("ca"),
           sum(when(col("event_type") === "view", 1L).otherwise(0L)).as("cb"))
-      val (cum, totals) = graft.Ranks.globalPrefixSums(per, Seq("ca", "cb"),
-        Seq(col("cents")), Seq("f1", "f2"))
-      val (n1, n2) = (totals(0), totals(1))
+      val (cum, Seq(n1, n2)) = Ranks.scan(per, Seq(col("cents")),
+        Ranks.Sum("ca", "cb"), Seq("f1", "f2"))
       // intermediates in DECIMAL(38,0): f1·n2 and d_num·1e6 wrap LONG
       // once cohorts reach ~3e9 rows (ANSI off wraps SILENTLY) — the
       // oracle's HUGEINT does the same widening. Outputs stay BIGINT
@@ -301,20 +301,21 @@ object CurationPack extends QueryPack {
     }),
 
     // Exact quantile binning (decile assignment) at scale: global rank via
-    // range-partition sort + zipWithIndex (the sc4 shape — never a single-
-    // partition window), then the ANSI ntile() bucket formula applied to
-    // the rank arithmetically. Emits per-bin counts and price bounds.
+    // the Ranks.scan range sort (the sc4 shape — never a single-partition
+    // window), then the ANSI ntile() bucket formula applied to the rank
+    // arithmetically. Emits per-bin counts and price bounds.
     "c5_quantile_bins" -> ((s, dir) => {
       val k = 10
-      val ranked = graft.Ranks.globalRank(
-        Tables.orders(s, dir), "o_orderkey", "o_totalprice", "r",
-        Seq(col("o_totalprice").asc, col("o_orderkey").asc))
+      val ranked = Ranks.scan(
+        Tables.orders(s, dir).select(Num.required("o_orderkey", LongType),
+          Num.required("o_totalprice", DoubleType)),
+        Seq(col("o_totalprice").asc, col("o_orderkey").asc),
+        Ranks.Rank, Seq("r"))._1
       // n as a LAZY broadcast scalar (count-only parquet scan, folded into
       // the plan) rather than an eager driver .count() — constructing the
-      // query must not run a job, and the ntile arithmetic below is plain
-      // column math so the scalar never leaves the executors. (globalRank's
-      // zipWithIndex still runs its offset job on first use; that cost is
-      // intrinsic to the contiguous-rank shape, not a second scan.)
+      // query runs no job beyond the rank's subtotal pass, and the ntile
+      // arithmetic below is plain column math so the scalar never leaves
+      // the executors.
       val nDf = Tables.orders(s, dir).agg(count(lit(1)).as("n"))
       ranked
         .crossJoin(broadcast(nDf))

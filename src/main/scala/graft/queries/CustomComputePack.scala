@@ -2,8 +2,8 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
-import graft.{Num, QueryPack, Tables}
+import org.apache.spark.sql.types.{DecimalType, DoubleType, LongType}
+import graft.{Num, QueryPack, Ranks, Tables}
 import graft.ops.{Ar1, Ewm, Holt, Interpolate, SeriesStats}
 
 /** Custom per-series compute (SURVEY §2.9, §7.4): operators with no
@@ -86,8 +86,9 @@ object CustomComputePack extends QueryPack {
     "stats_qq_plot" -> ((s, dir) => {
       val o = Tables.orders(s, dir)
       val dec2 = DecimalType(18, 2)
-      val ranked = graft.Ranks.globalRank(o, "o_orderkey", "o_totalprice", "r",
-        Seq(col("o_totalprice").asc, col("o_orderkey").asc))
+      val ranked = Ranks.scan(o.select(Num.required("o_orderkey", LongType),
+          Num.required("o_totalprice", DoubleType)),
+        Seq(col("o_totalprice").asc, col("o_orderkey").asc), Ranks.Rank, Seq("r"))._1
       val m = o.agg(
           count(lit(1)).as("n"),
           sum(col("o_totalprice").cast(dec2)).cast("double").as("sx"),

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType}
-import graft.{Num, QueryPack, Tables}
+import graft.{Num, QueryPack, Ranks, Tables}
 
 /** ML-boundary operators (SURVEY §2.10): the parts of the reference's
   * sklearn pipelines that are relational at heart — target encoding
@@ -55,14 +55,21 @@ object MlPack extends QueryPack {
       items
     }
 
+  /** Events in the global (ts, event_id) order with their cents value `y`
+    * and 0-based position `r` — the fold geometry every time-series CV
+    * and backtest query cuts — plus the row count, read lazily. */
+  private def timeRanked(s: SparkSession, dir: String): (DataFrame, Seq[Long]) = {
+    val (ranked, n) = Ranks.scan(
+      Tables.events(s, dir).select(col("ts"), col("event_id"),
+        Num.cents(col("value")).as("y")),
+      Seq(col("ts"), col("event_id")), Ranks.Rank, Seq("r1"))
+    (ranked.withColumn("r", col("r1") - 1), n)
+  }
+
   /** The ml_gbt_backtest fold geometry: global-ranked events with the
     * lag-1 value as a feature column, all double-typed for MLlib. */
   private def gbtRanked(s: SparkSession, dir: String): DataFrame = {
-    val ranked0 = graft.Ranks.globalRankRows(
-        Tables.events(s, dir).select(col("ts"), col("event_id"),
-          graft.Num.cents(col("value")).as("y")),
-        "r1", Seq(col("ts"), col("event_id")))
-      .withColumn("r", col("r1") - 1)
+    val ranked0 = timeRanked(s, dir)._1
     ranked0.join(
         ranked0.select((col("r") + 1).as("r"), col("y").as("y_prev")),
         Seq("r"), "left")
@@ -177,8 +184,8 @@ object MlPack extends QueryPack {
           "envelope; widen to a decimal accumulator")
       val packed = types.withColumn("packed",
         col("np") * (1L << 32) + col("nn"))
-      val cum = graft.Ranks.globalPrefixSum(
-        packed, "packed", Seq(col("c").desc), "cum_packed")
+      val cum = Ranks.scan(packed, Seq(col("c").desc), Ranks.Sum("packed"),
+          Seq("cum_packed"))._1
         .withColumn("cum_p", shiftright(col("cum_packed"), 32))
         .withColumn("cum_n", col("cum_packed").bitwiseAND(lit(0xffffffffL)))
       cum.agg(
@@ -250,8 +257,8 @@ object MlPack extends QueryPack {
         s"class sizes ($nP, $nN) exceed the 2^30 packing envelope")
       val packed = types.withColumn("packed",
         col("np") * (1L << 32) + col("nn"))
-      graft.Ranks.globalPrefixSum(
-          packed, "packed", Seq(col("c").desc), "cum_packed")
+      Ranks.scan(packed, Seq(col("c").desc), Ranks.Sum("packed"),
+          Seq("cum_packed"))._1
         .withColumn("cum_p", shiftright(col("cum_packed"), 32))
         .withColumn("cum_n", col("cum_packed").bitwiseAND(lit(0xffffffffL)))
         .select(col("c").as("threshold_cents"),
@@ -267,7 +274,7 @@ object MlPack extends QueryPack {
     // targeting readout next to ml_auc's ranking and ml_calibration's
     // probability check ("mailing the top 20% by score catches X% of
     // buyers at Y× random"). Rows rank on (score DESC, id) via
-    // Ranks.globalRankRows (range-partitioned sort + zipWithIndex —
+    // Ranks.scan (range-partitioned sort + per-partition row counts —
     // never a one-task window over the corpus); deciles are integer
     // arithmetic on the rank; per-decile counts shuffle 10 cells; the
     // cumulative pass windows the FIXED 10-row decile table (bounded by
@@ -280,8 +287,8 @@ object MlPack extends QueryPack {
         .select(col("event_id"),
           (col("event_type") === "purchase").as("pos"),
           Num.cents(col("value")).as("c"))
-      val ranked = graft.Ranks.globalRankRows(ev, "rk",
-        Seq(col("c").desc, col("event_id").asc))
+      val ranked = Ranks.scan(ev, Seq(col("c").desc, col("event_id").asc),
+        Ranks.Rank, Seq("rk"))._1
       val tot = ev.agg(count(lit(1)),
         coalesce(sum(when(col("pos"), 1L).otherwise(0L)), lit(0L))).head()
       val (n, p) = (tot.getLong(0), tot.getLong(1))
@@ -350,8 +357,8 @@ object MlPack extends QueryPack {
     // integer arithmetic, so the oracle hash-matches bit-for-bit). IDCG
     // is the DCG of the ideal ordering — the positives ranked among
     // themselves — one extra range sort over the positive slice. Plan:
-    // two globalRankRows range sorts (range-partitioned sort +
-    // zipWithIndex, never a one-task window) + two 1-row aggs.
+    // two Ranks.scan range sorts (never a one-task window) + two 1-row
+    // aggs.
     "ml_ndcg" -> ((s, dir) => {
       val K = 100
       val gainE12 =
@@ -361,14 +368,14 @@ object MlPack extends QueryPack {
         .select(col("event_id"),
           (col("event_type") === "purchase").as("pos"),
           Num.cents(col("value")).as("c"))
-      val ranked = graft.Ranks.globalRankRows(ev, "rk",
-        Seq(col("c").desc, col("event_id").asc))
+      val ranked = Ranks.scan(ev, Seq(col("c").desc, col("event_id").asc),
+        Ranks.Rank, Seq("rk"))._1
       val dcg = ranked.filter(col("rk") <= K)
         .agg(
           sum(when(col("pos"), expr(gainE12)).otherwise(0L)).as("dcg_e12"),
           sum(when(col("pos"), 1L).otherwise(0L)).as("n_pos_at_k"))
-      val posRanked = graft.Ranks.globalRankRows(ev.filter(col("pos")),
-        "rk", Seq(col("c").desc, col("event_id").asc))
+      val posRanked = Ranks.scan(ev.filter(col("pos")),
+        Seq(col("c").desc, col("event_id").asc), Ranks.Rank, Seq("rk"))._1
       val idcg = posRanked.filter(col("rk") <= K)
         .agg(sum(expr(gainE12)).as("idcg_e12"))
       dcg.crossJoin(broadcast(idcg))
@@ -508,13 +515,12 @@ object MlPack extends QueryPack {
     // 18): fold i trains on the first test_start(i) rows of the global
     // (ts, event_id) order and tests on the next n//6; emitted as per
     // (fold, split) row counts + id checksums so the whole assignment is
-    // hash-checked. The global rank comes from the range-partitioned
-    // sort + zipWithIndex (the sc4/c5 shape) — never a single-partition
-    // row_number window.
+    // hash-checked. The global rank comes from the Ranks.scan range sort
+    // (the sc4/c5 shape) — never a single-partition row_number window.
     "ml_cv_splits" -> ((s, dir) => {
-      val ranked = graft.Ranks.globalRankRows(
+      val ranked = Ranks.scan(
           Tables.events(s, dir).select(col("ts"), col("event_id")),
-          "r1", Seq(col("ts"), col("event_id")))
+          Seq(col("ts"), col("event_id")), Ranks.Rank, Seq("r1"))._1
         .withColumn("r", col("r1") - 1)
       val t = ranked.agg(count(lit(1)).as("n"),
         (count(lit(1)) / lit(6)).cast("long").as("ts_sz"))
@@ -544,11 +550,7 @@ object MlPack extends QueryPack {
     // one broadcast of 5 fold coefficient rows.
     "ml_backtest" -> ((s, dir) => {
       val d38 = DecimalType(38, 0)
-      val ranked0 = graft.Ranks.globalRankRows(
-          Tables.events(s, dir).select(col("ts"), col("event_id"),
-            graft.Num.cents(col("value")).as("y")),
-          "r1", Seq(col("ts"), col("event_id")))
-        .withColumn("r", col("r1") - 1)
+      val ranked0 = timeRanked(s, dir)._1
       val ranked = ranked0.join(
         ranked0.select((col("r") + 1).as("r"), col("y").as("y_prev")),
         Seq("r"), "left")
@@ -634,18 +636,13 @@ object MlPack extends QueryPack {
       // the ranked fact table persists for the query's lifetime: the
       // halving rounds are sequential by nature, and without the cache
       // each round's prefix-moment and test-span scans would re-run the
-      // global rank (sort + zipWithIndex) — six rank computations for a
-      // three-round search (at 100 TB: persist once, filter many)
-      // WithTotal (r12): the rank construction's partition-offset job
-      // already counts every row — reading n from it saves the separate
-      // count action the fold geometry used to pay (round 0's collect
+      // global rank sort — six rank computations for a three-round
+      // search (at 100 TB: persist once, filter many). n is the rank's
+      // row total, counted by the scan's subtotal job, so the fold
+      // geometry pays no separate count action (round 0's collect
       // materializes the cache instead)
-      val (ranked0, n) = graft.Ranks.globalRankRowsWithTotal(
-          Tables.events(s, dir).select(col("ts"), col("event_id"),
-            graft.Num.cents(col("value")).as("y")),
-          "r1", Seq(col("ts"), col("event_id")))
-      val ranked = ranked0.withColumn("r", col("r1") - 1)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val (ranked0, Seq(n)) = timeRanked(s, dir)
+      val ranked = ranked0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       try {
       val tsSz = n / 6
       val ntf = n - tsSz
@@ -1150,11 +1147,7 @@ object MlPack extends QueryPack {
       alphasPpm: Seq[Long]): DataFrame = {
     import s.implicits._
     val d38 = DecimalType(38, 0)
-    val ranked = graft.Ranks.globalRankRows(
-        Tables.events(s, dir).select(col("ts"), col("event_id"),
-          graft.Num.cents(col("value")).as("y")),
-        "r1", Seq(col("ts"), col("event_id")))
-      .withColumn("r", col("r1") - 1)
+    val ranked = timeRanked(s, dir)._1
     val t = ranked.agg(count(lit(1)).as("n"),
       (count(lit(1)) / lit(6)).cast("long").as("ts_sz"))
     val folds = s.range(0, 5).toDF("fold")

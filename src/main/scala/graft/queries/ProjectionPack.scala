@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.{QueryPack, Tables}
+import graft.{QueryPack, Ranks, Tables}
 
 /** Projections / filters / predicates (SURVEY §2.2 P1–P11). */
 object ProjectionPack extends QueryPack {
@@ -99,15 +99,16 @@ object ProjectionPack extends QueryPack {
     // telescoping, deterministic, reproducible across engines (unlike
     // exponential-key A-ES sampling, whose ln() ranking is libm-
     // dependent). The cumulative line comes from the distributed prefix
-    // sum (range sort + broadcast offsets — never a one-task window);
+    // sum (Ranks.scan: range sort + per-partition starts — never a
+    // one-task window);
     // the draw itself is map-only. Weight = doc byte length (the
     // "sample long docs proportionally" curation knob).
     "p14_weighted_sample" -> ((s, dir) => {
       val k = 200L
       val docs = Tables.documents(s, dir)
         .select(col("doc_id"), length(col("text")).cast("long").as("w"))
-      val (cum, total) = graft.Ranks.globalPrefixSumWithTotal(
-        docs, "w", Seq(col("doc_id")), "cw")
+      val (cum, Seq(total)) = Ranks.scan(docs, Seq(col("doc_id")),
+        Ranks.Sum("w"), Seq("cw"))
       cum
         .withColumn("n_copies",
           expr(s"least($k, (${2 * k} * cw + $total) div (${2} * $total))") -

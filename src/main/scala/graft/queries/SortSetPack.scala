@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.{QueryPack, Tables}
+import graft.{QueryPack, Ranks, Tables}
 
 /** Sorts / limits / set operations (SURVEY §2.6 O1–O4, U1–U2 + set-op
   * surface the reference lacks). */
@@ -41,16 +41,17 @@ object SortSetPack extends QueryPack {
     // algorithm is the sweep: collapse to the best size per distinct
     // price (one hash shuffle), then a single price-ascending range sort
     // where a row survives iff its size exceeds the running max over all
-    // strictly-cheaper rows. The running max rides
-    // Ranks.globalPrefixMaxExclusive (per-partition maxima + broadcast
-    // offsets) — never a one-task `max() OVER (ORDER BY …)` window, so
-    // the sweep stays fully parallel at any scale.
+    // strictly-cheaper rows. The running max is a Ranks.scan MaxBefore
+    // carry (per-partition maxima, then a map pass resumed from the
+    // maxima of the earlier partitions) — never a one-task
+    // `max() OVER (ORDER BY …)` window, so the sweep stays fully parallel
+    // at any scale.
     "o4_skyline" -> ((s, dir) => {
       val best = Tables.part(s, dir)
         .groupBy(graft.Num.cents(col("p_retailprice")).as("price_cents"))
         .agg(max(col("p_size").cast("long")).as("best_size"))
-      graft.Ranks.globalPrefixMaxExclusive(best, "best_size",
-          Seq(col("price_cents")), "rmax")
+      Ranks.scan(best, Seq(col("price_cents")), Ranks.MaxBefore("best_size"),
+          Seq("rmax"))._1
         .filter(col("rmax").isNull || col("best_size") > col("rmax"))
         .select(col("price_cents"), col("best_size"))
     }),

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType, LongType}
-import graft.{Num, QueryPack, Tables}
+import graft.{Num, QueryPack, Ranks, Tables}
 
 /** Distributed two-sample hypothesis tests — the A/B-comparison primitives
   * a data-quality / experimentation pipeline runs over event streams
@@ -19,9 +19,9 @@ import graft.{Num, QueryPack, Tables}
   *
   *   1. collapse the corpus to its DISTINCT-value type table with per-group
   *      counts (one keyed shuffle; ties collapse map-side),
-  *   2. one [[graft.Ranks.globalPrefixSum]] pass over the type table
-  *      (range-partitioned sort + per-partition subtotal broadcast — the
-  *      sc4/t16 scan primitive, never a one-task window),
+  *   2. one [[graft.Ranks.scan]] Sum pass over the type table
+  *      (range-partitioned sort + per-partition subtotals — the sc4/t16
+  *      scan primitive, never a one-task window),
   *   3. per-row integer arithmetic recovers average ranks (Mann–Whitney)
   *      or both ECDFs (KS) exactly — all in Long space, so the DuckDB
   *      oracle's window replay hash-matches bit-for-bit; the only doubles
@@ -67,8 +67,8 @@ object StatsTestsPack extends QueryPack {
         "split the prefix pass per group or widen to a decimal accumulator")
     val packed = types.withColumn("packed",
       col("cnt_a") * (1L << 32) + col("cnt_b"))
-    val cum = graft.Ranks.globalPrefixSum(
-      packed, "packed", Seq(col("value")), "cum_packed")
+    val cum = Ranks.scan(packed, Seq(col("value")), Ranks.Sum("packed"),
+        Seq("cum_packed"))._1
       .withColumn("cum_a", shiftright(col("cum_packed"), 32))
       .withColumn("cum_b", col("cum_packed").bitwiseAND(lit(0xffffffffL)))
     (cum, nA, nB)
@@ -374,7 +374,7 @@ object StatsTestsPack extends QueryPack {
     // Kruskal–Wallis H ('click' / 'view' / 'purchase') — the k-sample
     // extension of stats_mannwhitney on the SAME machinery: the corpus
     // collapses map-side to its distinct-value type table, THREE group
-    // counts pack into one 3×21-bit long so a single globalPrefixSum
+    // counts pack into one 3×21-bit long so a single Ranks.scan Sum
     // range pass yields every group's cumulative count (envelope: each
     // group < 2²¹ ≈ 2M rows — beyond that, split the prefix pass per
     // group or widen to decimal; the require below makes the bound loud),
@@ -403,8 +403,8 @@ object StatsTestsPack extends QueryPack {
       val packed = types.withColumn("packed",
         col("cnt0") * (1L << 42) + col("cnt1") * (1L << 21) + col("cnt2"))
       val mask = lit((1L << 21) - 1)
-      val cum = graft.Ranks.globalPrefixSum(
-          packed, "packed", Seq(col("value")), "cum_packed")
+      val cum = Ranks.scan(packed, Seq(col("value")), Ranks.Sum("packed"),
+          Seq("cum_packed"))._1
         .withColumn("cum_all",
           shiftright(col("cum_packed"), 42) +
             shiftright(col("cum_packed"), 21).bitwiseAND(mask) +
@@ -660,7 +660,7 @@ object StatsTestsPack extends QueryPack {
   private def doubledRankTable(rows: DataFrame, valCol: String,
       rankCol: String): DataFrame = {
     val tt = rows.groupBy(col(valCol)).agg(count(lit(1)).as("cnt"))
-    graft.Ranks.globalPrefixSum(tt, "cnt", Seq(col(valCol)), "cum")
+    Ranks.scan(tt, Seq(col(valCol)), Ranks.Sum("cnt"), Seq("cum"))._1
       .withColumn(rankCol, (col("cum") - col("cnt")) * 2 + col("cnt") + 1)
       .select(col(valCol), col(rankCol))
   }
@@ -729,10 +729,10 @@ object StatsTestsPack extends QueryPack {
         .filter(col("event_type") === "purchase")
         .groupBy(Num.cents(col("value")).as("c"))
         .agg(count(lit(1)).as("cnt"))
-      // WithTotal: the prefix pass's subtotal job already computed n —
-      // a separate tt.agg would re-scan the corpus (code-review r9)
-      val (cum, n) = graft.Ranks.globalPrefixSumWithTotal(
-        tt, "cnt", Seq(col("c")), "cum")
+      // n is the scan's grand total: the subtotal job already computed
+      // it, and a separate tt.agg would re-scan the corpus
+      val (cum, Seq(n)) = Ranks.scan(tt, Seq(col("c")), Ranks.Sum("cnt"),
+        Seq("cum"))
       val z = 1.959963984540054
       val kMed = (n + 1) / 2
       val kLo = math.max(1L, math.floor((n - z * math.sqrt(n.toDouble)) / 2).toLong)

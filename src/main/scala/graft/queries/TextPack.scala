@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.{Num, QueryPack, Tables}
+import graft.{Num, QueryPack, Ranks, Tables}
 import graft.functions.Fnv64
 
 /** Text-analysis operators over `documents` (builder-prompt training-data
@@ -241,23 +241,21 @@ object TextPack extends QueryPack {
     // ascending = most fluent first; doc_id tiebreak makes the order
     // total), then cut exact TERTILES by integer rank arithmetic
     // (bucket = (rank−1)·3 div n — no FP threshold anywhere). The rank
-    // comes from the range-partitioned sort + zipWithIndex primitive,
-    // never a one-task window; docs too short to score (no bigrams)
-    // fall outside the buckets with NULL rank. head docs feed training
-    // as-is, middle gets sampled, tail gets dropped — the knob this
-    // table parameterizes.
+    // and n come from one Ranks.scan range sort, never a one-task
+    // window; docs too short to score (no bigrams) fall outside the
+    // buckets with NULL rank. head docs feed training as-is, middle gets
+    // sampled, tail gets dropped — the knob this table parameterizes.
     "t20_ppl_buckets" -> ((s, dir) => {
-      // the LM scoring feeds three consumers (the count knob, the rank
-      // sort, and the final join) — cached so the two gram shuffles and
-      // the vocab agg run ONCE per invocation, not three times (the a17
-      // triple-scan lesson; lifetime left to Spark's LRU, the
-      // minhashLshPairs discipline, since the returned frame is lazy)
+      // the LM scoring feeds two consumers (the rank sort and the final
+      // join) — cached so the two gram shuffles and the vocab agg run
+      // ONCE per invocation, not twice (the a17 triple-scan lesson;
+      // lifetime left to Spark's LRU, the minhashLshPairs discipline,
+      // since the returned frame is lazy)
       val ppl = lmPerplexity(s, dir).cache()
       val scored = ppl.filter(col("cross_entropy").isNotNull)
         .select(col("doc_id"), col("cross_entropy"))
-      val ranked = graft.Ranks.globalRankRows(scored, "rnk",
-        Seq(col("cross_entropy").asc, col("doc_id").asc))
-      val n = scored.count()
+      val (ranked, Seq(n)) = Ranks.scan(scored,
+        Seq(col("cross_entropy").asc, col("doc_id").asc), Ranks.Rank, Seq("rnk"))
       ppl.select(col("doc_id"), col("n_words"), col("cross_entropy"))
         .join(ranked.select(col("doc_id"), col("rnk")), Seq("doc_id"), "left")
         .select(col("doc_id"), col("n_words"), col("cross_entropy"),
@@ -591,9 +589,9 @@ object TextPack extends QueryPack {
     // (stopword hits — the natural-language proxy t2 defines; doc_id
     // tiebreak makes the order total) and keep documents until the
     // running token total reaches 60% of the corpus. The running total
-    // uses the distributed scan primitive (Ranks.globalPrefixSum:
-    // range-partitioned sort, bounded subtotal collect, broadcast
-    // offsets, map-only second pass) — never the single-partition
+    // uses the distributed scan primitive (Ranks.scan with a Sum carry:
+    // range-partitioned sort, bounded subtotal collect, per-partition
+    // starts, map-only second pass) — never the single-partition
     // `sum() OVER (ORDER BY …)` funnel. The budget derives from the
     // grand total the subtotal pass already collected (exact integer
     // math, total·6 div 10) — no separate corpus scan.
@@ -604,8 +602,9 @@ object TextPack extends QueryPack {
           size(col("words")).cast("long").as("n_tokens"),
           size(expr(s"filter(words, w -> w IN (${sqlList(stopEn)}))"))
             .cast("long").as("stop_hits"))
-      val (withCum, total) = graft.Ranks.globalPrefixSumWithTotal(docs,
-        "n_tokens", Seq(col("stop_hits").desc, col("doc_id").asc), "cum_tokens")
+      val (withCum, Seq(total)) = Ranks.scan(docs,
+        Seq(col("stop_hits").desc, col("doc_id").asc), Ranks.Sum("n_tokens"),
+        Seq("cum_tokens"))
       val budget = total * 6 / 10
       withCum.select(col("doc_id"), col("n_tokens"), col("stop_hits"),
         col("cum_tokens"), (col("cum_tokens") <= lit(budget)).as("selected"))
@@ -614,8 +613,8 @@ object TextPack extends QueryPack {
     // Zipf rank-frequency diagnostics — the corpus-health check every
     // tokenizer/dedup pipeline runs (a natural corpus reads slope ≈ −1
     // on log rank vs log freq; template spam bends it): type frequencies
-    // from one count shuffle, GLOBAL rank via the range-partitioned
-    // sort + zipWithIndex primitive (never a one-task window — the
+    // from one count shuffle, GLOBAL rank via the Ranks.scan range sort
+    // (never a one-task window — the
     // vocabulary at web scale is billions of types), then an OLS slope
     // whose every term is exact: ln(rank)/ln(freq) round ONCE to e6
     // fixed-point, the moment sums accumulate in DECIMAL(38,0) (operands
@@ -659,7 +658,7 @@ object TextPack extends QueryPack {
       val docs = Tables.documents(s, dir)
         .select(col("doc_id"),
           size(split(trim(col("text")), "\\s+")).cast("long").as("n_tok"))
-      graft.Ranks.globalPrefixSum(docs, "n_tok", Seq(col("doc_id")), "cum_tok")
+      Ranks.scan(docs, Seq(col("doc_id")), Ranks.Sum("n_tok"), Seq("cum_tok"))._1
         .select(col("doc_id"), col("n_tok"), col("cum_tok"),
           expr(s"(cum_tok - n_tok) div $W").as("bin_id"),
           expr(s"((cum_tok - n_tok) div $W) <> ((cum_tok - 1) div $W)")
@@ -670,8 +669,8 @@ object TextPack extends QueryPack {
       val vocab = Tables.documents(s, dir)
         .select(explode(split(trim(col("text")), "\\s+")).as("token"))
         .groupBy("token").agg(count(lit(1)).as("freq"))
-      val ranked = graft.Ranks.globalRankRows(vocab, "rnk",
-        Seq(col("freq").desc, col("token").asc))
+      val ranked = Ranks.scan(vocab, Seq(col("freq").desc, col("token").asc),
+        Ranks.Rank, Seq("rnk"))._1
       val pts = ranked.select(
         expr("CAST(floor(ln(CAST(rnk AS DOUBLE)) * 1000000 + 0.5) AS BIGINT)")
           .as("x_e6"),

@@ -12,6 +12,13 @@ object GraftSqlShim {
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
 
+  /** A DataFrame over an RDD of internal rows: `createDataFrame` without
+    * the external-Row decode and re-encode (graft.Ranks.scan). */
+  def ofInternalRows(spark: SparkSession,
+      rows: org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow],
+      schema: org.apache.spark.sql.types.StructType): DataFrame =
+    spark.asInstanceOf[classic.SparkSession].internalCreateDataFrame(rows, schema)
+
   /** Column ↔ Catalyst Expression bridge (`classic.ExpressionUtils` is
     * `private[sql]`): lets a library expression like graft's DotFExpr wrap
     * directly into a Column with no session-registry round-trip, so

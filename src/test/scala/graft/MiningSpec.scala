@@ -13,7 +13,7 @@ class MiningSpec extends SparkSuite {
     import spark.implicits._
     val df = Seq((5L, 10L), (1L, 7L), (3L, 2L), (4L, 9L), (2L, 7L), (6L, 1L))
       .toDF("k", "v").repartition(3)
-    val got = Ranks.globalPrefixMaxExclusive(df, "v", Seq(col("k")), "rm")
+    val got = Ranks.scan(df, Seq(col("k")), Ranks.MaxBefore("v"), Seq("rm"))._1
       .orderBy("k").collect()
       .map(r => (r.getLong(0), if (r.isNullAt(2)) None else Some(r.getLong(2))))
     assert(got.toSeq == Seq(

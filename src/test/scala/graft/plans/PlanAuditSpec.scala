@@ -110,12 +110,12 @@ class PlanAuditSpec extends SparkSuite {
 
   test("c5: decile binning ranks via the RDD sort path — no one-task window") {
     val plan = executedString("c5_quantile_bins")
-    // the global sort lives inside the zipWithIndex RDD lineage, which the
+    // the global sort lives inside the Ranks.scan RDD lineage, which the
     // SQL plan can only show as an ExistingRDD scan — asserting on that
     // scan plus the ABSENCE of any Window is what proves no single-task
     // funnel exists (a rangepartitioning exchange in this plan would only
     // be the trivial 10-row orderBy("bin"), so it proves nothing)
-    assert(plan.contains("SerializeFromObject"),
+    assert(plan.contains("ExistingRDD"),
       s"rank must come from the RDD sort:\n$plan")
     assert(!plan.contains("Window"), s"must not use a global window:\n$plan")
   }
@@ -133,8 +133,7 @@ class PlanAuditSpec extends SparkSuite {
     assert(!plan.contains("CartesianProduct"), plan)
     // rank + lag come from the RDD sort path and a rank-keyed self-join —
     // no single-partition window funnel anywhere in the fold machinery
-    // (the Row-based globalRankRows scan prints as ExistingRDD, unlike
-    // the typed globalRank's SerializeFromObject)
+    // (the Ranks.scan output prints as an ExistingRDD scan)
     assert(plan.contains("ExistingRDD"), plan)
     assert(!plan.contains("Window"), s"must not use a global window:\n$plan")
   }
@@ -144,7 +143,7 @@ class PlanAuditSpec extends SparkSuite {
     // the 99-row grid×moments side must broadcast onto the ranked values
     assert(plan.contains("BroadcastExchange") ||
       plan.contains("BroadcastNestedLoopJoin"), plan)
-    assert(plan.contains("SerializeFromObject"),
+    assert(plan.contains("ExistingRDD"),
       s"rank must come from the RDD sort:\n$plan")
     assert(!plan.contains("Window"), s"must not use a global window:\n$plan")
     assert(!plan.contains("CartesianProduct"), plan)
@@ -381,7 +380,7 @@ class PlanAuditSpec extends SparkSuite {
 
   test("t19: vocab rank comes from the RDD sort path, never a global window") {
     val plan = executedString("t19_zipf_slope")
-    assert(plan.contains("ExistingRDD") || plan.contains("SerializeFromObject"),
+    assert(plan.contains("ExistingRDD"),
       s"rank must come from the RDD sort:\n$plan")
     assert(!plan.contains("Window"), s"must not use a global window:\n$plan")
   }
@@ -669,7 +668,7 @@ class PlanAuditSpec extends SparkSuite {
 
   test("n11: RRF legs rank without a one-task window; top-20 rides TakeOrdered") {
     val plan = executedString("n11_hybrid_rrf")
-    assert(!plan.contains("Window"), s"ranks must come from globalRank:\n$plan")
+    assert(!plan.contains("Window"), s"ranks must come from Ranks.scan:\n$plan")
     assert(plan.contains("TakeOrderedAndProject"), plan)
     assert(plan.contains("FullOuter"), plan)
   }
@@ -755,9 +754,9 @@ class PlanAuditSpec extends SparkSuite {
   }
 
   test("spearman and lift never window the corpus — ranks ride the RDD scan line") {
-    // both rank via Ranks machinery (range sort + zipWithIndex / prefix
-    // broadcast), surfacing as ExistingRDD scans; the only Window allowed
-    // is lift's fixed 10-row decile cumulative
+    // both rank via Ranks.scan (range sort + per-partition subtotals),
+    // surfacing as ExistingRDD scans; the only Window allowed is lift's
+    // fixed 10-row decile cumulative
     val sp = executedString("stats_spearman")
     assert(sp.contains("ExistingRDD"), sp)
     assert(!sp.contains("Window"), sp)
@@ -822,10 +821,10 @@ class PlanAuditSpec extends SparkSuite {
   }
 
   test("c3: both KS CDFs ride the RDD prefix-sum path — no window at all") {
-    // the r11 reshape this pins (VERDICT r10 next #3): the cumulative
-    // step was the suite's last unpartitioned `sum() OVER (ORDER BY)`
-    // funnel; it now runs Ranks.globalPrefixSums (range sort + broadcast
-    // offset vectors), so the executed plan must contain NO WindowExec
+    // the cumulative step was the suite's last unpartitioned
+    // `sum() OVER (ORDER BY)` funnel; it now runs a two-column Ranks.scan
+    // Sum (range sort + per-partition subtotal vectors), so the executed
+    // plan must contain NO WindowExec
     // whatsoever and the prefix sums must surface as the RDD scan
     val plan = executedString("c3_ks_drift")
     assert(!plan.contains("Window"), s"must not use a window:\n$plan")
