@@ -38,6 +38,10 @@ object Fingerprint {
 
   private val cache =
     new java.util.concurrent.ConcurrentHashMap[String, (String, AnyRef)]()
+  /** One monitor per key: a compute holds its own key only, so the body
+    * may memoise other keys (a schema inside a truth set), and lookups of
+    * unrelated keys never wait on a running Spark job. */
+  private val locks = new java.util.concurrent.ConcurrentHashMap[String, AnyRef]()
 
   /** Memoize `compute` under (label, content fingerprint of `dataPath`).
     * The cache holds ONE entry per (label, dataPath): a changed fingerprint
@@ -51,23 +55,28 @@ object Fingerprint {
     memoEvict[T](label, dataPath, _ => ())(compute)
 
   /** [[memo]] with a release hook for values pinning executor resources.
-    * The hook runs AFTER the map update, outside the bin lock — a slow or
-    * blocking unpersist must not stall unrelated memo lookups — and only
+    * The hook runs AFTER the update, outside every lock — a slow or
+    * blocking unpersist must not stall other memo lookups — and only
     * NonFatal hook failures are swallowed (a dead session must not block
-    * the rebuild, but a dying JVM must not be masked; code-review r7). */
+    * the rebuild, but a dying JVM must not be masked; code-review r7).
+    * Concurrent callers of one key compute it once. */
   def memoEvict[T <: AnyRef](label: String, dataPath: String,
       onEvict: T => Unit)(compute: => T): T = {
     val key = label + "|" + dataPath
     val fp = dir(dataPath)
-    var evictedVal: AnyRef = null
-    val out = cache.compute(key, (_, prev) =>
-      if (prev != null && prev._1 == fp) prev
+    val hit = cache.get(key)
+    if (hit != null && hit._1 == fp) return hit._2.asInstanceOf[T]
+    val (out, evicted) = locks.computeIfAbsent(key, _ => new AnyRef).synchronized {
+      val prev = cache.get(key)
+      if (prev != null && prev._1 == fp) (prev._2, null)
       else {
-        if (prev != null) evictedVal = prev._2
-        (fp, compute)
-      })._2
-    if (evictedVal != null) {
-      try onEvict(evictedVal.asInstanceOf[T])
+        val v = compute
+        cache.put(key, (fp, v))
+        (v, if (prev == null) null else prev._2)
+      }
+    }
+    if (evicted != null) {
+      try onEvict(evicted.asInstanceOf[T])
       catch { case scala.util.control.NonFatal(_) => () }
     }
     out.asInstanceOf[T]

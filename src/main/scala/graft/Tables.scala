@@ -19,7 +19,25 @@ object Tables {
     // casts). The oracle (DuckDB) follows IEEE float semantics for double
     // math (x/0 → inf, 0/0 → NaN), so pin classic semantics per session.
     spark.conf.set("spark.sql.ansi.enabled", "false")
-    spark.read.parquet(s"$sfDir/$name.parquet")
+    val path = s"$sfDir/$name.parquet"
+    spark.read.schema(schemaOf(spark, path)).parquet(path)
+  }
+
+  /** The schema `spark.read.parquet(path)` infers. Inference reads the
+    * footers in a Spark job on every call, so it is memoised per content
+    * fingerprint of `path` and per value of every parquet reader conf set
+    * on the session (`nanosAsLong` and its kin change the inferred types).
+    * A path the local filesystem cannot see (an object store) has no
+    * fingerprint and is inferred each time. */
+  def schemaOf(spark: SparkSession, path: String): StructType = {
+    def infer = spark.read.parquet(path).schema
+    if (!java.nio.file.Files.exists(java.nio.file.Paths.get(path))) infer
+    else {
+      val confs = spark.conf.getAll.filter { case (k, _) =>
+        k.startsWith("spark.sql.parquet.") || k.startsWith("spark.sql.legacy.parquet.")
+      }.toSeq.sorted.mkString(",")
+      Fingerprint.memo(s"parquet-schema|$confs", path)(infer)
+    }
   }
 
   /** Normalize a timestamp-ish column to micros TimestampType whatever

@@ -88,4 +88,10 @@ object WindowFeatures {
       .filter(col("__rn") === 1)
       .drop("__rn")
   }
+
+  /** W12 over a series window `w`: true on the first row of each run of
+    * equal `c`, so it selects `dedupKeepFirst(df, key +: c, order)` when `c`
+    * is non-decreasing in `w`'s order (a calendar date of the time column)
+    * — with no second partitioning or sort. */
+  def firstOfRun(c: Column, w: WindowSpec): Column = not(lag(c, 1).over(w) <=> c)
 }

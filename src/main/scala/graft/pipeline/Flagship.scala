@@ -12,13 +12,17 @@ import graft.ops.WindowFeatures._
   * rename → calendar + cyclic features → per-key window features (diff,
   * lag {1,2,3,5}, trailing rolling {3,5} mean/volatility) → na.fill(0) on
   * the 9 feature columns → deterministic keep-first dedup per (user_id,
-  * date) → refined frame.
+  * date) → rebalance by date → refined frame, ready for the reference's
+  * `partitionBy("date")` write (glue.py:237).
   *
   * Mapping: series key `user_id` ↔ `acao`, time `ts` ↔ trading date,
   * measure `value` ↔ `fechamento`, dim `customer` ↔ the 84-row carteira CSV
   * (glue.py:100,131-134). The dim is small ⇒ broadcast hash join, no
-  * shuffle of the fact side for the join; the window features cost exactly
-  * one shuffle (hash-partition by user_id) shared across all 9 columns.
+  * shuffle of the fact side for the join. The frame pays two exchanges:
+  * one hash exchange on user_id (and its one sort) serves all 9 features
+  * and the dedup flag, and one rebalance on date lays the output out for
+  * the write, so each date lands in one write task (one file per date)
+  * while AQE still splits an oversized date and coalesces small ones.
   *
   * Reference quirk kept (SURVEY §4): windows are computed BEFORE dedup, so
   * duplicate (key, date) rows do perturb lag features, exactly like
@@ -75,14 +79,21 @@ object Flagship {
         .withColumn(s"volatility_${j}_value_diff", Num.r6(rollingStd(col("value_diff"), j, w)))
     }
 
-    // Impute (glue.py:202-214) then deterministic keep-first dedup per
-    // (user_id, date) (glue.py:226).
-    val filled = withRoll.na.fill(0.0, featureCols)
+    // Deterministic keep-first dedup per (user_id, date) (glue.py:226) as
+    // a flag over the same window `w`: date = CAST(ts AS DATE) is
+    // non-decreasing in ts (pinned UTC session), so in (ts, event_id) order
+    // a (user_id, date)'s rows are contiguous and the first of them is
+    // `dedupKeepFirst`'s row_number() = 1, without its second sort. Imputed
+    // (glue.py:202-214) before the filter, like the reference.
+    val flagged = withRoll
+      .withColumn("__first", firstOfRun(col("date"), w))
+      .na.fill(0.0, featureCols)
     val outCols = Seq(
       "user_id", "date", "event_type", "value", "segment", "dayofweek",
       "month", "day_sin", "day_cos", "month_sin", "month_cos") ++ featureCols
-    dedupKeepFirst(filled, Seq(col("user_id"), col("date")), Seq(col("ts"), col("event_id")))
+    flagged.filter(col("__first"))
       .select(outCols.map(col): _*)
+      .hint("rebalance", col("date"))
   }
 
   /** DuckDB oracle for `refined` — same math, same rounding, same

@@ -31,8 +31,7 @@ object Streams {
   private def eventStream(spark: SparkSession, sfDir: String): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.session.timeZone", "UTC") // see Tables.events
-    val tsType = spark.read.parquet(s"$sfDir/events.parquet")
-      .schema("ts").dataType
+    val tsType = graft.Tables.schemaOf(spark, s"$sfDir/events.parquet")("ts").dataType
     val schema = StructType(Seq(
       StructField("event_id", LongType), StructField("ts", tsType),
       StructField("user_id", LongType), StructField("event_type", StringType),
@@ -351,8 +350,7 @@ object Streams {
     val s2 = cacheDir.resolve("sentinel2.parquet")
     if (!java.nio.file.Files.exists(s1) || !java.nio.file.Files.exists(s2)) {
       java.nio.file.Files.createDirectories(cacheDir)
-      val tsType = spark.read.parquet(s"$sfDir/events.parquet")
-        .schema("ts").dataType
+      val tsType = graft.Tables.schemaOf(spark, s"$sfDir/events.parquet")("ts").dataType
       def build(target: java.nio.file.Path, when: String): Unit = {
         val at = java.sql.Timestamp.valueOf(when)
         val rowList = new java.util.ArrayList[org.apache.spark.sql.Row]()
@@ -423,8 +421,7 @@ object Streams {
       : (java.nio.file.Path, org.apache.spark.sql.types.DataType) = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    val tsType = spark.read.parquet(s"$sfDir/events.parquet")
-      .schema("ts").dataType
+    val tsType = graft.Tables.schemaOf(spark, s"$sfDir/events.parquet")("ts").dataType
     val (s1, s2) = sentinelFiles(spark, sfDir, tag, sentinelRows)
     val inDir = java.nio.file.Paths.get(
       s"/tmp/graft_stream_$tag/${sfDir.replaceAll("[^A-Za-z0-9]", "_")}")

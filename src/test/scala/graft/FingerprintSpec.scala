@@ -42,6 +42,26 @@ class FingerprintSpec extends AnyFunSuite {
     assert(evicted.toSeq == Seq("v1"), "exactly the replaced value is released")
   }
 
+  test("a memo body may memoise other labels; a replaced value's hook runs once") {
+    val d = tmpData()
+    val evicted = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val inner = (0 until 64).map(i => s"i$i")
+    val v = new java.util.concurrent.atomic.AtomicInteger()
+    def get() = Fingerprint.memoEvict[String]("fp_spec_outer", d.toString,
+        old => evicted.add(old)) {
+      val got = inner.map(s => Fingerprint.memo(s"fp_spec_inner_$s", d.toString)(s))
+      s"v${v.incrementAndGet()}:" + got.mkString(",")
+    }
+    val all = inner.mkString(",")
+    assert(get() == s"v1:$all" && get() == s"v1:$all" && evicted.isEmpty)
+    java.nio.file.Files.write(d.resolve("part-0.parquet"), "changed".getBytes)
+    // eight concurrent callers after the change: one recompute, one release
+    val callers = (0 until 8).map(_ => new java.util.concurrent.FutureTask(() => get()))
+    callers.foreach(t => new Thread(t).start())
+    assert(callers.map(_.get()).toSet == Set(s"v2:$all"))
+    assert(evicted.toArray.toSeq == Seq(s"v1:$all"))
+  }
+
   test("a throwing eviction hook does not block the rebuild") {
     val d = tmpData()
     var v = 0

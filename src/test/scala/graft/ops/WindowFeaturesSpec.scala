@@ -71,6 +71,27 @@ class WindowFeaturesSpec extends SparkSuite {
     val got = dedupKeepFirst(d, Seq(col("k1"), col("k2")), Seq(col("seq")))
       .orderBy("seq").collect().map(_.getLong(2))
     assert(got.toSeq === Seq(1L, 3L, 4L))
+
+    // per (user_id, date) by (ts, event_id), the flagship's dedup: same-ts
+    // ties fall to event_id, and rows on both sides of midnight (UTC
+    // session) are different dates. firstOfRun over the series window
+    // selects exactly the same rows.
+    val ev = Seq(
+      (1L, "2024-03-01 23:59:59", 7L), (1L, "2024-03-01 23:59:59", 3L),
+      (1L, "2024-03-02 00:00:00", 9L), (1L, "2024-03-02 00:00:00", 1L),
+      (1L, "2024-03-02 12:00:00", 2L),
+      (2L, "2024-03-01 00:00:00", 5L), (2L, "2024-03-01 23:59:59.999999", 4L),
+      (2L, "2024-03-02 00:00:00.000001", 6L)
+    ).toDF("user_id", "t", "event_id")
+      .withColumn("ts", to_timestamp(col("t")))
+      .withColumn("date", col("ts").cast("date"))
+    val byRank = dedupKeepFirst(ev, Seq(col("user_id"), col("date")),
+      Seq(col("ts"), col("event_id")))
+    val byFlag = ev.withColumn("first", firstOfRun(col("date"), w)).filter(col("first"))
+    def ids(f: org.apache.spark.sql.DataFrame) =
+      f.select("event_id").as[Long].collect().sorted.toSeq
+    assert(ids(byRank) === Seq(1L, 3L, 5L, 6L))
+    assert(ids(byFlag) === ids(byRank))
   }
 
   test("rsi: all-gain windows are NULL (SQL x/0 semantics), mixed windows in [0,100]") {

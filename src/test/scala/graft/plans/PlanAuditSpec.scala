@@ -65,6 +65,18 @@ class PlanAuditSpec extends SparkSuite {
     assert("Sort ".r.findAllIn(p15).size == 1, p15)
   }
 
+  test("flagship: one user_id exchange and sort for features and dedup, one date rebalance") {
+    val plan = executedString("flagship_refined")
+    // shuffle exchanges only: the dim side is a BroadcastExchange
+    val exchanges = """(?<!Broadcast)Exchange (\w+)\((\w+)#\d+L?, \d+\), (\w+)""".r
+      .findAllMatchIn(plan).map(m => (m.group(1), m.group(2), m.group(3))).toSeq
+    assert(exchanges.map(e => (e._2, e._3)).sorted == Seq(
+      ("date", "REBALANCE_PARTITIONS_BY_COL"), ("user_id", "ENSURE_REQUIREMENTS")), plan)
+    assert(exchanges.forall(_._1 == "hashpartitioning"), plan)
+    assert("(?<!Broadcast)Exchange ".r.findAllIn(plan).size == 2, plan)
+    assert("Sort ".r.findAllIn(plan).size == 1, plan)
+  }
+
   test("x5 grouping sets expands once — a single aggregation shuffle") {
     val plan = executedString("x5_grouping_sets")
     assert(plan.contains("Expand"), plan)
