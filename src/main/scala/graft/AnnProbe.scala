@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Knob-tuning harness for the ANN scale paths: measures recall@5 (on a
@@ -21,13 +20,7 @@ object AnnProbe {
       if (args.length > 1) args.drop(1).toSeq
       else Seq("lsh:0,0,6", "lsh:8,1,6", "ivf:0,0", "ivf:16,4",
         "ivfpq:16,8", "ivfpq:64,16")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local()
 
     val e = Tables.embeddings(spark, dir)
     val n = e.count()

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan auditor: prints `explain("formatted")` for the named queries (or a
   * default set) so scan pushdown / broadcast / codegen spans can be
   * inspected. Usage: runMain graft.Explain <sfDir> [query names…]
@@ -14,14 +12,7 @@ object Explain {
         "flagship_refined", "w3_rolling_mean", "sc5_topk_exec",
         "sc6_bloom_prefilter", "a14_quality_checks", "x5_grouping_sets",
         "s9_dsv2_source")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local()
     names.foreach { n =>
       println(s"\n========== $n ==========")
       SparkEntry.queries(n)(spark, sfDir).explain("formatted")

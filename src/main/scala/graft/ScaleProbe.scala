@@ -587,8 +587,6 @@ object ScaleProbe {
       case _ => df
     }
 
-    // events.parquet carries TIMESTAMP(NANOS): read raw
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val verTag = s"$BuildVersion:$copies" +
       (if (only.isEmpty) "" else s":${only.toSeq.sorted.mkString("+")}")
     val verFile = java.nio.file.Paths.get(s"$out/_build_version")
@@ -648,16 +646,7 @@ object ScaleProbe {
     require(unknown.isEmpty,
       s"unknown probe queries: ${unknown.mkString(", ")}; " +
         s"known: ${ProbeQueries.mkString(", ")}")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local()
 
     build(spark, base, out, copies)
 

@@ -2,10 +2,15 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
+/** Driver contract — see SURVEY.md §7.
   *
   * Query names are grouped by SURVEY §2 operator family; each module
   * contributes a [[QueryPack]] (queries + DuckDB oracle SQL).
+  *
+  * Pin contract: every function here that receives a session (`entry`,
+  * `warm` and each value of `queries`) first calls [[Session.pin]], so a
+  * session built elsewhere gets the oracle-parity confs before any table is
+  * read. Nothing below this layer sets them.
   */
 object SparkEntry {
 
@@ -38,8 +43,10 @@ object SparkEntry {
   )
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
-  def entry(spark: SparkSession): DataFrame =
+  def entry(spark: SparkSession): DataFrame = {
+    Session.pin(spark)
     pipeline.Flagship.refined(spark, "/root/testdata/sf0.001")
+  }
 
   /** One entry per implemented operator from SURVEY.md §2. */
   def queries: Map[String, (SparkSession, String) => DataFrame] = {
@@ -48,7 +55,9 @@ object SparkEntry {
     require(m.size == all.size,
       s"duplicate query names across packs: ${
         all.groupBy(_._1).collect { case (k, v) if v.size > 1 => k }.mkString(", ")}")
-    m
+    m.map { case (name, fn) =>
+      name -> { (s: SparkSession, d: String) => Session.pin(s); fn(s, d) }
+    }
   }
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
@@ -58,6 +67,8 @@ object SparkEntry {
 
   /** Pre-populate per-dataset verification state (memoized ground-truth
     * scans) so timed runs measure operators, not their checkers. */
-  def warm(spark: SparkSession, sfDir: String): Unit =
+  def warm(spark: SparkSession, sfDir: String): Unit = {
+    Session.pin(spark)
     packs.foreach(_.warm(spark, sfDir))
+  }
 }

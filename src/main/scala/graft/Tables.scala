@@ -14,11 +14,9 @@ import org.apache.spark.sql.types._
   * pushdown provide scan pruning (SURVEY §2.1 S1).
   */
 object Tables {
+  /** Reads `<sfDir>/<name>.parquet`; the session's confs are left as they
+    * are (the oracle-parity ones are [[Session.pin]]'s). */
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame = {
-    // Spark 4 defaults to ANSI semantics (errors on div-by-zero, strict
-    // casts). The oracle (DuckDB) follows IEEE float semantics for double
-    // math (x/0 → inf, 0/0 → NaN), so pin classic semantics per session.
-    spark.conf.set("spark.sql.ansi.enabled", "false")
     val path = s"$sfDir/$name.parquet"
     spark.read.schema(schemaOf(spark, path)).parquet(path)
   }
@@ -42,11 +40,11 @@ object Tables {
 
   /** Normalize a timestamp-ish column to micros TimestampType whatever
     * physical type the current fixture generation shipped (see `events` —
-    * the same drift would break o_orderdate/l_shipdate, and a prior
-    * `events()` call leaves `nanosAsLong` set session-wide, so a nanos
-    * generation would surface here as a LongType column). A cast on an
-    * already-TimestampType column is eliminated by Catalyst, so scan
-    * pruning and filter pushdown are unaffected on the common path. */
+    * the same drift would break o_orderdate/l_shipdate, and under the
+    * pinned `nanosAsLong` a nanos generation surfaces here as a LongType
+    * column). A cast on an already-TimestampType column is eliminated by
+    * Catalyst, so scan pruning and filter pushdown are unaffected on the
+    * common path. */
   private def tsNorm(df: DataFrame, c: String): DataFrame =
     df.schema(c).dataType match {
       case LongType => df.withColumn(c, expr(s"timestamp_micros($c div 1000)"))
@@ -68,15 +66,9 @@ object Tables {
     * Spark infers as TIMESTAMP_NTZ. Normalize BOTH to the same micros
     * TimestampType (truncation for nanos is exactly what DuckDB 1.x does
     * at scan time; the NTZ→LTZ cast is value-preserving under the pinned
-    * UTC session) so every downstream query and oracle sees one schema. */
+    * UTC session) so every downstream query and oracle sees one schema.
+    * Both confs are [[Session.pin]]'s. */
   def events(spark: SparkSession, d: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    // the NTZ→LTZ cast below is session-timezone-sensitive; pin UTC here
-    // (not just in our own mains) so an external session on a non-UTC box
-    // cannot silently shift instants relative to the DuckDB oracle's
-    // naive-timestamp arithmetic — same defensive per-call pin as load()'s
-    // ansi flag
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     val raw = load(spark, d, "events")
     raw.schema("ts").dataType match {
       case LongType => raw.withColumn("ts", expr("timestamp_micros(ts div 1000)"))

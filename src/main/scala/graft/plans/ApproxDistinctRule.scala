@@ -59,7 +59,11 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
 }
 
 object GraftExtensions {
-  def install(spark: SparkSession): Unit = {
+  /** The one live-session registration. Idempotent; the check-then-set on
+    * the session-global experimental lists runs under one lock, so
+    * concurrent first callers register each extension once. The two rules
+    * stay inert until their conf keys turn them on. */
+  def install(spark: SparkSession): Unit = synchronized {
     val existing = spark.experimental.extraOptimizations
     val wanted = Seq(ApproxDistinctRule, CartesianGuard)
     spark.experimental.extraOptimizations =

@@ -28,8 +28,8 @@ import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy, UnaryExecNode}
   *
   * The logical node is planned by [[TopKStrategy]], injected either via
   * `SparkSessionExtensions.injectPlannerStrategy` ([[GraftExtensions]]) or
-  * live on a session through `spark.experimental.extraStrategies` (what
-  * [[TopK.perKey]] does).
+  * live on a session by `GraftExtensions.install` (which [[TopK.perKey]]
+  * calls).
   */
 case class TopKPerKeyPlan(keys: Seq[Expression], order: Seq[SortOrder],
     k: Int, child: LogicalPlan) extends UnaryNode {
@@ -120,14 +120,7 @@ object TopK {
   def perKey(df: DataFrame, keyCols: Seq[String], scoreCol: String,
       tieCols: Seq[String], k: Int): DataFrame = {
     val spark = df.sparkSession
-    // extraStrategies is session-global mutable state: guard the
-    // check-then-set so concurrent first callers can't double-register.
-    TopK.synchronized {
-      if (!spark.experimental.extraStrategies.contains(TopKStrategy)) {
-        spark.experimental.extraStrategies =
-          TopKStrategy +: spark.experimental.extraStrategies
-      }
-    }
+    GraftExtensions.install(spark)
     val analyzed = df.queryExecution.analyzed
     def attr(n: String): Attribute = analyzed.output.find(_.name == n)
       .getOrElse(throw new IllegalArgumentException(

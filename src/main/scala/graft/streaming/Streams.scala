@@ -29,8 +29,6 @@ object Streams {
     * one-file batch peek picks the matching pinned schema and both
     * normalize to the same micros TimestampType. */
   private def eventStream(spark: SparkSession, sfDir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.session.timeZone", "UTC") // see Tables.events
     val tsType = graft.Tables.schemaOf(spark, s"$sfDir/events.parquet")("ts").dataType
     val schema = StructType(Seq(
       StructField("event_id", LongType), StructField("ts", tsType),
@@ -132,18 +130,15 @@ object Streams {
     * core-count default before that (r10). */
   private def runToTable(df: DataFrame, spark: SparkSession, name: String,
       outputMode: String, inputBytes: Long): DataFrame = {
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions",
-      statePartitions(inputBytes).toString)
-    val (chk, chkCleanup) = freshCheckpoint()
-    try {
-      val q = df.writeStream.format("memory").queryName(name)
-        .option("checkpointLocation", chk)
-        .outputMode(outputMode).start()
-      try q.processAllAvailable() finally q.stop()
-    } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", prev)
-      chkCleanup()
+    graft.Session.withConf(spark,
+        "spark.sql.shuffle.partitions" -> statePartitions(inputBytes).toString) {
+      val (chk, chkCleanup) = freshCheckpoint()
+      try {
+        val q = df.writeStream.format("memory").queryName(name)
+          .option("checkpointLocation", chk)
+          .outputMode(outputMode).start()
+        try q.processAllAvailable() finally q.stop()
+      } finally chkCleanup()
     }
     spark.table(name)
   }
@@ -271,11 +266,8 @@ object Streams {
   def transformWithStateTotals(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    graft.Session.withConf(spark, "spark.sql.streaming.stateStore.providerClass" ->
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") {
       val updated = eventStream(spark, sfDir)
         .select(col("user_id"), col("value")).as[Ev]
         .groupByKey(_.user_id)
@@ -286,9 +278,6 @@ object Streams {
       all.withColumn("rn", row_number().over(
           Window.partitionBy(col("user_id")).orderBy(col("n_events").desc)))
         .filter(col("rn") === 1).drop("rn")
-    } finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
     }
   }
 
@@ -419,8 +408,6 @@ object Streams {
   private def stageMergedSentinels(spark: SparkSession, sfDir: String,
       tag: String, sentinelRows: Seq[(Long, Long, String)])
       : (java.nio.file.Path, org.apache.spark.sql.types.DataType) = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     val tsType = graft.Tables.schemaOf(spark, s"$sfDir/events.parquet")("ts").dataType
     val (s1, s2) = sentinelFiles(spark, sfDir, tag, sentinelRows)
     val inDir = java.nio.file.Paths.get(
@@ -481,22 +468,8 @@ object Streams {
     // the hard way: the join's watermark stalled at the real data's max
     // while a filterless count read the sentinels fine). Sentinels are
     // filtered from the RESULT table instead, in batch context.
-    // inline runToTable: the memory-sink query name differs and the
-    // sentinel-row filter below runs on the RESULT table
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions",
-      statePartitions(eventsBytes(sfDir)).toString)
-    val (chk, chkCleanup) = freshCheckpoint()
-    try {
-      val q = joined.writeStream.format("memory")
-        .queryName("graft_stream_outer_join").outputMode("append")
-        .option("checkpointLocation", chk).start()
-      try q.processAllAvailable() finally q.stop()
-    } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", prev)
-      chkCleanup()
-    }
-    spark.table("graft_stream_outer_join").filter(col("user_id") >= 0)
+    runToTable(joined, spark, "graft_stream_outer_join", "append", eventsBytes(sfDir))
+      .filter(col("user_id") >= 0)
   }
 
   /** STREAMING sessionization — session_window under a watermark in
@@ -538,20 +511,8 @@ object Streams {
       .groupBy(session_window(col("ts"), "30 minutes"), col("user_id"))
       .agg(count(lit(1)).as("n_events"), min(col("ts")).as("session_start"))
       .select(col("user_id"), col("session_start"), col("n_events"))
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions",
-      statePartitions(eventsBytes(sfDir)).toString)
-    val (chk, chkCleanup) = freshCheckpoint()
-    try {
-      val q = sess.writeStream.format("memory")
-        .queryName("graft_stream_sessions").outputMode("append")
-        .option("checkpointLocation", chk).start()
-      try q.processAllAvailable() finally q.stop()
-    } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", prev)
-      chkCleanup()
-    }
-    spark.table("graft_stream_sessions").filter(col("user_id") >= 0)
+    runToTable(sess, spark, "graft_stream_sessions", "append", eventsBytes(sfDir))
+      .filter(col("user_id") >= 0)
   }
 
   /** The production sink path: `foreachBatch` writing day-partitioned
@@ -566,9 +527,7 @@ object Streams {
     // already-processed and leave the freshly-deleted sink empty); on
     // tmpfs like every other verification-stream checkpoint (r11)
     val (chk, chkCleanup) = freshCheckpoint()
-    val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try {
+    try graft.Session.withConf(spark, "spark.sql.sources.partitionOverwriteMode" -> "dynamic") {
       val q = eventStream(spark, sfDir)
         .withColumn("day", to_date(col("ts")))
         .select(col("event_id"), col("user_id"), col("day"), col("value"))
@@ -589,13 +548,7 @@ object Streams {
         .option("checkpointLocation", chk)
         .start()
       try q.processAllAvailable() finally q.stop()
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-        case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-      }
-      chkCleanup()
-    }
+    } finally chkCleanup()
     spark.read.parquet(outDir)
       .select(col("event_id"), col("user_id"), col("day"), col("value"))
   }

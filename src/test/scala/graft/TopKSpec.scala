@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.plans.TopK
+import graft.plans.{ApproxDistinctRule, CartesianGuard, GraftExtensions, TopK, TopKStrategy}
 
 class TopKSpec extends SparkSuite {
 
@@ -61,5 +61,23 @@ class TopKSpec extends SparkSuite {
     val top2 = TopK.perKey(df, Seq("k"), "score", Seq("id"), 2)
       .select("k", "id").as[(String, Long)].collect().toSet
     assert(top2 == Set(("a", 1L), ("a", 2L), ("b", 5L)))
+  }
+
+  test("install from 8 threads registers each extension exactly once") {
+    val s2 = spark.newSession()
+    val go = new java.util.concurrent.CountDownLatch(1)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(8)
+    try {
+      val done = (1 to 8).map(_ => pool.submit(new Runnable {
+        def run(): Unit = { go.await(); GraftExtensions.install(s2) }
+      }))
+      go.countDown()
+      done.foreach(_.get())
+    } finally pool.shutdown()
+    val strategies = s2.experimental.extraStrategies
+    val rules = s2.experimental.extraOptimizations
+    assert(strategies.count(_ == TopKStrategy) == 1, strategies)
+    assert(rules.count(_ == ApproxDistinctRule) == 1, rules)
+    assert(rules.count(_ == CartesianGuard) == 1, rules)
   }
 }
