@@ -147,8 +147,12 @@ object Tables {
   *  - `r6`/`r2`: round window/frame results where both engines see the same
   *    ordered frame but may differ in the last ulp (segment-tree vs
   *    sequential summation).
+  *  - `sumProd`/`centred`/`sumCentsProd` + `exactOrRaise`: exact integer
+  *    moments in [[Exact]] (DuckDB's HUGEINT), which either answer
+  *    exactly or raise.
   */
 object Num {
+  import org.apache.spark.sql.Column
   /** Cross-engine-deterministic 6-decimal rounding: `floor(x·1e6+0.5)/1e6`
     * is pure IEEE double arithmetic, so Spark and DuckDB produce the SAME
     * result on the SAME input double — unlike library `round`, where Spark
@@ -180,6 +184,56 @@ object Num {
     * from; SQL twin: `CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT)`. */
   def cents(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
     (c.cast(DecimalType(18, 2)) * 100).cast("long")
+
+  /** DECIMAL(38,0), the twin of DuckDB's HUGEINT: the accumulator of every
+    * exact integer moment. With ANSI off (the oracle-parity session) a
+    * LONG sum or product wraps silently, while an Exact sum or product
+    * that overflows is NULL, which [[exactOrRaise]] turns into an error. */
+  val Exact: DecimalType = DecimalType(38, 0)
+
+  /** Exact Σ a·b of two integral columns. Both operands are cast to
+    * [[Exact]] BEFORE the product, so no per-row LONG product can wrap;
+    * SQL twin: `sum(CAST(a AS HUGEINT) * b)`. */
+  def sumProd(a: Column, b: Column): Column = sum(a.cast(Exact) * b.cast(Exact))
+
+  /** The exact centred moment n·Σab − Σa·Σb (n·Σa² − (Σa)² when a = b). */
+  def centred(n: Column, sab: Column, sa: Column, sb: Column): Column =
+    n.cast(Exact) * sab.cast(Exact) - sa.cast(Exact) * sb.cast(Exact)
+
+  /** Largest |cents| whose LONG square cannot wrap: (3·10⁹)² = 9·10¹⁸ < 2⁶³.
+    * The envelope is per value, so it does not shrink as the data grows. */
+  val CentsBound = 3000000000L
+
+  /** The cents-LONG form of [[sumProd]] for integers bounded by the value
+    * domain (cents of a price): one LONG multiply per row, summed in
+    * [[Exact]]. The product is exact while |a| and |b| stay within
+    * [[CentsBound]]; past it the moment is NULL, like an overflowing
+    * Exact sum, so [[exactOrRaise]] covers both forms. */
+  def sumCentsProd(a: Column, b: Column): Column =
+    when(max(abs(a)) <= CentsBound && max(abs(b)) <= CentsBound,
+      sum((a * b).cast(Exact)))
+
+  /** A Σ of cents products rescaled by ×1e-4 (exact) to the units of the
+    * 2-decimal values the cents came from: it equals the DECIMAL(28,4) sum
+    * of their DECIMAL(18,2) products, so the doubles it casts to do too. */
+  def fromCents2(c: Column): Column =
+    c * lit(new java.math.BigDecimal("0.0001"))
+
+  /** Makes the action raise, naming `what`, on any row where `ok` is not
+    * true. It is a filter on `df` (assert_true is NULL when it holds), so
+    * it adds no job; on an aggregated frame it runs once per group. */
+  def check(df: DataFrame, what: String, ok: Column): DataFrame =
+    df.filter(assert_true(ok, lit(what)).isNull)
+
+  /** The one overflow check of the exact moments: raises, naming `what`,
+    * when any of `cols` is NULL on a row whose group is non-empty
+    * (`n > 0`). A sum of non-null integers over a non-empty group is NULL
+    * only on overflow; an empty global aggregate keeps its NULL moments. */
+  def exactOrRaise(df: DataFrame, what: String, n: Column,
+      cols: Column*): DataFrame =
+    check(df, s"$what: an exact moment overflowed DECIMAL(38,0) or the " +
+      s"$CentsBound-cents product envelope",
+      !coalesce(n > 0, lit(false)) || cols.map(_.isNotNull).reduce(_ && _))
 
   /** Column `name` cast to `t`, non-nullable, raising on a null row: the
     * contract of a primitive-typed decode such as `.as[(Long, Double)]`,

@@ -73,6 +73,64 @@ object SeriesStats {
     n.toDouble * (n + 2) * q
   }
 
+  private val Dec2 = DecimalType(18, 2)
+
+  /** Per series (user_id, in (ts, event_id) order) the exact moments both
+    * [[adfLjungBoxAgg]] and [[acfPacf]] start from: n, Σy, Σy², and per
+    * lag k ≤ h the pair count cntₖ, Σy·y₋ₖ and the tail sums saₖ, sbₖ,
+    * then the `extra` aggregates over the same lagged rows. The products
+    * take Num's cents-LONG form, rescaled to the DECIMAL(28,4) sums of
+    * the oracle ([[lagMomentsSql]]), so the doubles are the same; a value
+    * past 3·10⁷ raises, naming `what`. Checking Σy² suffices, since
+    * |Σy·y₋ₖ| ≤ Σy² (Cauchy–Schwarz) and a |y₋ₖ| is some |y|. */
+  private def lagMoments(events: DataFrame, h: Int, what: String,
+      extra: Column*): DataFrame = {
+    val w = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
+    val lagged = events.select((Seq(col("user_id"), col("ts"), col("event_id"),
+      col("value")) ++ (1 to h).map(k => lag(col("value"), k).over(w).as(s"x$k"))): _*)
+    val yd = col("value").cast(Dec2)
+    val yc = graft.Num.cents(col("value"))
+    def prod(c: Column) =
+      graft.Num.fromCents2(graft.Num.sumCentsProd(yc, c)).cast("double")
+    val perK = (1 to h).flatMap { k =>
+      val xk = col(s"x$k")
+      Seq(count(xk).as(s"cnt$k"),
+        prod(graft.Num.cents(xk)).as(s"sxy$k"),
+        sum(when(xk.isNotNull, yd)).cast("double").as(s"sa$k"),
+        sum(xk.cast(Dec2)).cast("double").as(s"sb$k"))
+    }
+    val g = lagged.groupBy(col("user_id")).agg(count(lit(1)).as("n"),
+      (Seq(sum(yd).cast("double").as("sy"), prod(yc).as("syy")) ++ perK ++ extra): _*)
+    graft.Num.exactOrRaise(g, what, col("n"), col("syy"))
+  }
+
+  private val YdSql = "CAST(value AS DECIMAL(18,2))"
+  private def xdSql(k: Int) = s"CAST(x$k AS DECIMAL(18,2))"
+
+  /** The DuckDB twin of [[lagMoments]], shared by both oracles: the
+    * lagged CTE and the per-series select up to the last lag's moments. */
+  private def lagMomentsSql(h: Int): String = {
+    val lagCols = (1 to h).map(k => s"lag(value, $k) OVER w AS x$k").mkString(",\n    ")
+    val yd = YdSql
+    val perK = (1 to h).map { k =>
+      s"""    count(x$k) AS cnt$k,
+         |    CAST(sum(CAST($yd * ${xdSql(k)} AS DECIMAL(28,4))) AS DOUBLE) AS sxy$k,
+         |    CAST(sum(CASE WHEN x$k IS NOT NULL THEN $yd END) AS DOUBLE) AS sa$k,
+         |    CAST(sum(${xdSql(k)}) AS DOUBLE) AS sb$k""".stripMargin
+    }.mkString(",\n")
+    s"""WITH lagged AS (
+       |  SELECT user_id, value,
+       |    $lagCols
+       |  FROM events
+       |  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
+       |), g AS (
+       |  SELECT user_id,
+       |    count(*) AS n,
+       |    CAST(sum($yd) AS DOUBLE) AS sy,
+       |    CAST(sum(CAST($yd * $yd AS DECIMAL(28,4))) AS DOUBLE) AS syy,
+       |$perK""".stripMargin
+  }
+
   /** Declarative (agg-expression) formulation of the SAME statistics,
     * derived from EXACT decimal raw moments so the result is bit-identical
     * at any partition count AND cross-engine (the oracle-parity pattern of
@@ -96,33 +154,17 @@ object SeriesStats {
     * SeriesStatsSpec (`SeriesStatsRef`) as its cross-check.
     */
   def adfLjungBoxAgg(events: DataFrame, h: Int = 10): DataFrame = {
-    val dec2 = DecimalType(18, 2)
     val dec4 = DecimalType(28, 4)
-    val w = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
-    var df = events.select(col("user_id"), col("ts"), col("event_id"), col("value"))
-    for (k <- 1 to h) df = df.withColumn(s"x$k", lag(col("value"), k).over(w))
-
-    val yd = col("value").cast(dec2)
-    val x1d = col("x1").cast(dec2)
+    val yd = col("value").cast(Dec2)
+    val x1d = col("x1").cast(Dec2)
     val dyd = yd - x1d // exact; null (excluded) on the first row of a series
-    val aggs = scala.collection.mutable.ArrayBuffer[Column](
-      count(lit(1)).as("n"),
-      sum(yd).cast("double").as("sy"),
-      sum((yd * yd).cast(dec4)).cast("double").as("syy"))
-    for (k <- 1 to h) {
-      val xkd = col(s"x$k").cast(dec2)
-      aggs += count(col(s"x$k")).as(s"cnt$k")
-      aggs += sum((yd * xkd).cast(dec4)).cast("double").as(s"sxy$k")
-      aggs += sum(when(col(s"x$k").isNotNull, yd)).cast("double").as(s"sa$k")
-      aggs += sum(xkd).cast("double").as(s"sb$k")
-    }
-    aggs += count(col("x1")).as("np")
-    aggs += sum(x1d).cast("double").as("adf_sx")
-    aggs += sum(dyd).cast("double").as("adf_sdy")
-    aggs += sum((x1d * x1d).cast(dec4)).cast("double").as("adf_sxx")
-    aggs += sum((x1d * dyd).cast(dec4)).cast("double").as("adf_sxdy")
-    aggs += sum((dyd * dyd).cast(dec4)).cast("double").as("adf_sdydy")
-    val g = df.groupBy(col("user_id")).agg(aggs.head, aggs.tail.toSeq: _*)
+    val g = lagMoments(events, h, "adfLjungBoxAgg",
+      count(col("x1")).as("np"),
+      sum(x1d).cast("double").as("adf_sx"),
+      sum(dyd).cast("double").as("adf_sdy"),
+      sum((x1d * x1d).cast(dec4)).cast("double").as("adf_sxx"),
+      sum((x1d * dyd).cast(dec4)).cast("double").as("adf_sxdy"),
+      sum((dyd * dyd).cast(dec4)).cast("double").as("adf_sdydy"))
 
     val m = col("sy") / col("n")
     val c0 = col("syy") - col("sy") * m
@@ -147,30 +189,13 @@ object SeriesStats {
   /** DuckDB oracle for [[adfLjungBoxAgg]] — generated from the same `h` so
     * the lag expressions can never drift from the Spark side. */
   def adfLjungBoxOracle(h: Int = 10): String = {
-    val lagCols = (1 to h).map(k => s"lag(value, $k) OVER w AS x$k").mkString(",\n    ")
-    val yd = "CAST(value AS DECIMAL(18,2))"
-    def xd(k: Int) = s"CAST(x$k AS DECIMAL(18,2))"
-    val perK = (1 to h).map { k =>
-      s"""    count(x$k) AS cnt$k,
-         |    CAST(sum(CAST($yd * ${xd(k)} AS DECIMAL(28,4))) AS DOUBLE) AS sxy$k,
-         |    CAST(sum(CASE WHEN x$k IS NOT NULL THEN $yd END) AS DOUBLE) AS sa$k,
-         |    CAST(sum(${xd(k)}) AS DOUBLE) AS sb$k""".stripMargin
-    }.mkString(",\n")
+    val yd = YdSql
+    def xd(k: Int) = xdSql(k)
     val qTerms = (1 to h).map { k =>
       s"(((sxy$k - m * (sa$k + sb$k) + cnt$k * m * m) / c0) * " +
         s"((sxy$k - m * (sa$k + sb$k) + cnt$k * m * m) / c0)) / cnt$k"
     }.mkString("\n      + ")
-    s"""WITH lagged AS (
-       |  SELECT user_id, value,
-       |    $lagCols
-       |  FROM events
-       |  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-       |), g AS (
-       |  SELECT user_id,
-       |    count(*) AS n,
-       |    CAST(sum($yd) AS DOUBLE) AS sy,
-       |    CAST(sum(CAST($yd * $yd AS DECIMAL(28,4))) AS DOUBLE) AS syy,
-       |$perK,
+    s"""${lagMomentsSql(h)},
        |    count(x1) AS np,
        |    CAST(sum(${xd(1)}) AS DOUBLE) AS adf_sx,
        |    CAST(sum($yd - ${xd(1)}) AS DOUBLE) AS adf_sdy,
@@ -244,42 +269,7 @@ object SeriesStats {
   def acfPacf(events: DataFrame, h: Int = 10): DataFrame = {
     val spark = events.sparkSession
     import spark.implicits._
-    val dec2 = DecimalType(18, 2)
-    val dec4 = DecimalType(28, 4)
-    val w = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
-    var df = events.select(col("user_id"), col("ts"), col("event_id"), col("value"))
-    for (k <- 1 to h) df = df.withColumn(s"x$k", lag(col("value"), k).over(w))
-
-    val yd = col("value").cast(dec2)
-    // r12 (guide §4, narrower types — the ml_select_kbest pattern): the
-    // h+1 product moments per row were DECIMAL(18,2) multiplies (a
-    // BigDecimal multiply + changePrecision each); they are now exact
-    // cents-LONG multiplies accumulated in DECIMAL(38,0). The long
-    // product is exact iff |cents| ≤ ~3.0e9 (product ≤ 9e18 < Long.Max)
-    // — a per-VALUE envelope on the price-domain `value` column,
-    // invariant in corpus size, asserted loudly below. The DECIMAL(38,0)
-    // sum equals the old DECIMAL(28,4) sum × 1e4; one exact ×1e-4
-    // decimal multiply reconstructs it, so the emitted doubles (and the
-    // oracle hash) are bit-identical.
-    val dec38 = DecimalType(38, 0)
-    val e4 = lit(new java.math.BigDecimal("0.0001"))
-    val yc = graft.Num.cents(col("value"))
-    val aggs = scala.collection.mutable.ArrayBuffer[Column](
-      count(lit(1)).as("n"),
-      sum(yd).cast("double").as("sy"),
-      (sum((yc * yc).cast(dec38)) * e4).cast("double").as("syy"),
-      max(abs(yc)).as("mxc"))
-    for (k <- 1 to h) {
-      val xkc = graft.Num.cents(col(s"x$k"))
-      aggs += count(col(s"x$k")).as(s"cnt$k")
-      aggs += (sum((yc * xkc).cast(dec38)) * e4).cast("double").as(s"sxy$k")
-      aggs += sum(when(col(s"x$k").isNotNull, yd)).cast("double").as(s"sa$k")
-      aggs += sum(col(s"x$k").cast(dec2)).cast("double").as(s"sb$k")
-    }
-    val g = df.groupBy(col("user_id")).agg(aggs.head, aggs.tail.toSeq: _*)
-      .filter(assert_true(col("mxc") <= 3000000000L,
-        lit("acfPacf: a cents value exceeds the long-product envelope " +
-          "(3.0e9); widen the product accumulators")).isNull)
+    val g = lagMoments(events, h, "acfPacf")
 
     val m = col("sy") / col("n")
     val c0 = col("syy") - col("sy") * m
@@ -316,15 +306,6 @@ object SeriesStats {
     * Durbin–Levinson recursion unrolled as a CTE chain whose expression
     * shapes replay [[durbinLevinson]]'s operation order exactly. */
   def acfPacfOracle(h: Int = 10): String = {
-    val lagCols = (1 to h).map(k => s"lag(value, $k) OVER w AS x$k").mkString(",\n    ")
-    val yd = "CAST(value AS DECIMAL(18,2))"
-    def xd(k: Int) = s"CAST(x$k AS DECIMAL(18,2))"
-    val perK = (1 to h).map { k =>
-      s"""    count(x$k) AS cnt$k,
-         |    CAST(sum(CAST($yd * ${xd(k)} AS DECIMAL(28,4))) AS DOUBLE) AS sxy$k,
-         |    CAST(sum(CASE WHEN x$k IS NOT NULL THEN $yd END) AS DOUBLE) AS sa$k,
-         |    CAST(sum(${xd(k)}) AS DOUBLE) AS sb$k""".stripMargin
-    }.mkString(",\n")
     val rhoSel = (1 to h).map { k =>
       s"(sxy$k - m * (sa$k + sb$k) + cnt$k * m * m) / c0 AS rho$k"
     }.mkString(",\n    ")
@@ -348,17 +329,7 @@ object SeriesStats {
          |  floor(phi_${k}_$k * 1000000 + 0.5) / 1000000 AS pacf
          |FROM d$h""".stripMargin
     }.mkString("\nUNION ALL\n")
-    s"""WITH lagged AS (
-       |  SELECT user_id, value,
-       |    $lagCols
-       |  FROM events
-       |  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-       |), g AS (
-       |  SELECT user_id,
-       |    count(*) AS n,
-       |    CAST(sum($yd) AS DOUBLE) AS sy,
-       |    CAST(sum(CAST($yd * $yd AS DECIMAL(28,4))) AS DOUBLE) AS syy,
-       |$perK
+    s"""${lagMomentsSql(h)}
        |  FROM lagged GROUP BY user_id
        |), p AS (
        |  SELECT *, sy / n AS m FROM g

@@ -248,14 +248,14 @@ object CurationPack extends QueryPack {
           sum(when(col("event_type") === "view", 1L).otherwise(0L)).as("cb"))
       val (cum, Seq(n1, n2)) = Ranks.scan(per, Seq(col("cents")),
         Ranks.Sum("ca", "cb"), Seq("f1", "f2"))
-      // intermediates in DECIMAL(38,0): f1·n2 and d_num·1e6 wrap LONG
+      // intermediates in Num.Exact: f1·n2 and d_num·1e6 wrap LONG
       // once cohorts reach ~3e9 rows (ANSI off wraps SILENTLY) — the
       // oracle's HUGEINT does the same widening. Outputs stay BIGINT
       // (exact until d_num itself exceeds 9.2e18).
       cum
-        .agg(max(abs(col("f1").cast("decimal(38,0)") * lit(n2) -
-                     col("f2").cast("decimal(38,0)") * lit(n1))).as("d_dec"))
-        .withColumn("den", lit(n1).cast("decimal(38,0)") * lit(n2))
+        .agg(max(abs(col("f1").cast(Num.Exact) * lit(n2) -
+                     col("f2").cast(Num.Exact) * lit(n1))).as("d_dec"))
+        .withColumn("den", lit(n1).cast(Num.Exact) * lit(n2))
         .withColumn("d_stat",
           expr("CAST((d_dec * 1000000 + den div 2) div den AS BIGINT)")
             .cast("double") / 1000000.0)

@@ -221,7 +221,7 @@ object CustomComputePack extends QueryPack {
           Num.r6(col("phi_s")).as("phi_s"),
           Num.r6(col("sigma2")).as("sigma2"))),
 
-    // One-step-ahead AR(1) forecast (VERDICT r7 #7) — the engine twin of
+    // One-step-ahead AR(1) forecast — the engine twin of
     // the reference's predict step (lambda_predict/lambda_function.py:21-101
     // composes each ticker's fitted model into next-day ŷ): the fitted
     // (φ, c) applied back onto its series, x̂_{t+1} = c + φ·x_last, plus
@@ -248,7 +248,7 @@ object CustomComputePack extends QueryPack {
         .withColumn("xc", lag(col("yc"), 1).over(w))
         .withColumn("rn_last", row_number().over(wDesc))
         .cache()
-      val sums = paired.filter(col("xc").isNotNull)
+      val moments = paired.filter(col("xc").isNotNull)
         .groupBy(col("user_id"))
         .agg(
           count(lit(1)).cast(DecimalType(6, 0)).as("n"),
@@ -263,32 +263,28 @@ object CustomComputePack extends QueryPack {
           (col("n") * col("sxy") - col("sx") * col("sy")).cast(DecimalType(19, 0)))
         .withColumn("q",
           (col("n") * col("sxx") - col("sx") * col("sx")).cast(DecimalType(19, 0)))
-        // the decimal precisions above are sized for the fixture envelope
-        // (2-decimal values, |value| ≲ 1e4, series ≲ 1e4 rows); with
-        // ansi=false an out-of-envelope fixture would overflow a cast to
-        // NULL and the q≠0 filter would then silently DROP the series
-        // while the HUGEINT oracle keeps it. Fail loudly instead: sums
-        // over non-null cents are never null except on overflow, so a
-        // null p/q here is proof of overflow (assert_true returns null
-        // when the condition holds, so the filter passes every valid row)
-        .filter(assert_true(col("p").isNotNull && col("q").isNotNull,
-          lit("stats_ar1_forecast: decimal overflow — fixture exceeds " +
-            "the moment-precision envelope; widen the DecimalTypes")).isNull)
+      // the decimal precisions above are sized for the fixture envelope
+      // (2-decimal values, |value| ≲ 1e4, series ≲ 1e4 rows); an
+      // out-of-envelope fixture overflows a cast to NULL, and the q≠0
+      // filter would then silently DROP the series while the HUGEINT
+      // oracle keeps it, so a NULL p or q raises
+      val sums = Num.exactOrRaise(moments, "stats_ar1_forecast", col("n"),
+          col("p"), col("q"))
         .filter(col("q") =!= 0)
       val lastv = paired.filter(col("rn_last") === 1)
         .select(col("user_id"), col("yc").as("x_last"))
-      val resid = paired.filter(col("xc").isNotNull)
-        .join(sums, "user_id")
-        .groupBy(col("user_id"))
-        .agg(
-          sum(abs(col("n") * col("q") * col("yc") - col("q") * col("sy")
-            + col("p") * col("sx") - col("n") * col("p") * col("xc")))
-            .as("sum_abs_ar1"),
-          sum(abs(col("yc") - col("xc"))).as("sum_abs_naive"))
-        // same overflow guard for the per-row residual products (n·Q·y
-        // peaks ~n²·X³ — the largest intermediates in the query)
-        .filter(assert_true(col("sum_abs_ar1").isNotNull,
-          lit("stats_ar1_forecast: residual-sum decimal overflow")).isNull)
+      // the same check for the per-row residual products (n·Q·y peaks
+      // ~n²·X³, the largest intermediates in the query); every group has
+      // at least one row
+      val resid = Num.exactOrRaise(paired.filter(col("xc").isNotNull)
+          .join(sums, "user_id")
+          .groupBy(col("user_id"))
+          .agg(
+            sum(abs(col("n") * col("q") * col("yc") - col("q") * col("sy")
+              + col("p") * col("sx") - col("n") * col("p") * col("xc")))
+              .as("sum_abs_ar1"),
+            sum(abs(col("yc") - col("xc"))).as("sum_abs_naive")),
+        "stats_ar1_forecast", lit(1), col("sum_abs_ar1"))
       sums.join(resid, "user_id").join(lastv, "user_id")
         .select(col("user_id"), col("n").cast("long").as("n"),
           Num.r6(col("p").cast("double") / col("q").cast("double")).as("phi"),

@@ -66,6 +66,34 @@ object MlPack extends QueryPack {
     (ranked.withColumn("r", col("r1") - 1), n)
   }
 
+  /** The OLS trend fit y ~ r of each `by` group of the `train` rows, from
+    * the exact moments (n, Σr, Σy, Σry, Σrr) and their centred terms,
+    * raising naming `what` if one overflows. Slope b and intercept a are
+    * each one IEEE expression, mirrored by the oracles. With `alphas`, the
+    * groups cross a broadcast of the ridge candidates and b's denominator
+    * is scaled by 1 + α·1e-6; without, it is unscaled. */
+  private def trendFit(train: DataFrame, by: Seq[String],
+      alphas: Option[DataFrame], what: String): DataFrame = {
+    val n = col("n_train")
+    val m = train.groupBy(by.map(col): _*).agg(
+        count(lit(1)).as("n_train"),
+        sum(col("r").cast(Num.Exact)).as("sr"),
+        sum(col("y").cast(Num.Exact)).as("sy"),
+        Num.sumProd(col("r"), col("y")).as("sry"),
+        Num.sumProd(col("r"), col("r")).as("srr"))
+      .withColumn("cry", Num.centred(n, col("sry"), col("sr"), col("sy")))
+      .withColumn("crr", Num.centred(n, col("srr"), col("sr"), col("sr")))
+    val fit = Num.exactOrRaise(m, what, n, col("cry"), col("crr"))
+    val den = col("crr").cast(DoubleType)
+    val ridge = alphas.map(_ =>
+      lit(1.0) + col("alpha_ppm").cast(DoubleType) / lit(1000000.0))
+    alphas.fold(fit)(a => fit.crossJoin(broadcast(a)))
+      .withColumn("b", col("cry").cast(DoubleType) / ridge.fold(den)(den * _))
+      .withColumn("a",
+        (col("sy").cast(DoubleType) - col("b") * col("sr").cast(DoubleType)) /
+          n.cast(DoubleType))
+  }
+
   /** The ml_gbt_backtest fold geometry: global-ranked events with the
     * lag-1 value as a feature column, all double-typed for MLlib. */
   private def gbtRanked(s: SparkSession, dir: String): DataFrame = {
@@ -204,13 +232,12 @@ object MlPack extends QueryPack {
     // the strictly proper scoring rule next to ECE's binned readout.
     // conf = (c − cmin)/span exactly as ml_calibration defines it, so the
     // numerator Σ(x − y·span)² is EXACT integer arithmetic (x, span, y
-    // all integers; accumulated in DECIMAL(38,0) — x² brushes 2⁶³ at
-    // wide spans) and ONE final division makes the float. Companion
+    // all integers; a cents-LONG product summed exactly — x² brushes 2⁶³
+    // at wide spans) and ONE final division makes the float. Companion
     // columns: the base rate and the uncertainty term ȳ(1−ȳ) (the Brier
     // decomposition's irreducible floor), both exact ratios. One scan,
     // one knob agg — t2's map-only slope.
     "ml_brier" -> ((s, dir) => {
-      val dec = DecimalType(38, 0)
       val ev = Tables.events(s, dir)
         .filter(col("event_type").isin("click", "purchase"))
         .select((col("event_type") === "purchase").as("pos"),
@@ -222,7 +249,8 @@ object MlPack extends QueryPack {
       val (cmin, n, nPos) = (mm.getLong(0), mm.getLong(2), mm.getLong(3))
       val span = math.max(1L, mm.getLong(1) - cmin)
       val err = (col("c") - cmin) - when(col("pos"), span).otherwise(0L)
-      ev.agg(sum((err * err).cast(dec)).as("sq"))
+      Num.exactOrRaise(ev.agg(Num.sumCentsProd(err, err).as("sq")),
+          "ml_brier", lit(n), col("sq"))
         .select(lit(n).as("n"), lit(nPos).as("n_pos"),
           Num.r6(col("sq").cast(DoubleType) /
             (n.toDouble * span.toDouble * span.toDouble)).as("brier"),
@@ -432,67 +460,51 @@ object MlPack extends QueryPack {
     // ONE scan — so the scores (and the selected set) are bit-identical
     // cross-engine. k=3 of 5 lineitem features vs l_extendedprice.
     "ml_select_kbest" -> ((s, dir) => {
-      // spread: 17 decimal-product aggregates per row is a CPU-dense map
-      // stage (the (28,4) products leave the long-backed fast path), and
-      // the one-split fixture scan serialized it; the fan-out carries
+      // spread: the decimal-product aggregates make a CPU-dense map stage
+      // and the one-split fixture scan serialized it; the fan-out carries
       // only the 6 needed columns, and partial aggregation still collapses
-      // each partition to one row before the final exchange (r11)
+      // each partition to one row before the final exchange
       val li = Tables.spread(Tables.lineitem(s, dir)
         .select((KBestFeatures :+ "l_extendedprice").map(col): _*))
       val dec2 = DecimalType(18, 2)
       val dec4 = DecimalType(28, 4)
-      val dec38 = DecimalType(38, 0)
       val yd = col("l_extendedprice").cast(dec2)
       val yc = Num.cents(col("l_extendedprice"))
-      // r12 (guide §4, narrower types; VERDICT r11 next #5): the product
-      // moments among PRICE-DOMAIN columns (extendedprice, quantity,
-      // discount, tax — bounded by the data contract, never by corpus
-      // size) multiply exact cents LONGs instead of DECIMAL(18,2)s, so
-      // the per-row hot path is one long multiply feeding a decimal
-      // accumulate rather than a BigDecimal multiply + changePrecision.
-      // The long product is exact iff both operands stay ≤ ~3.0e9 cents
-      // (product ≤ 9e18 < Long.Max) — a per-VALUE envelope, invariant in
-      // n, asserted loudly below (the stats_spearman discipline). The
-      // SUM accumulates in DECIMAL(38,0) — exact at any n, and equal to
-      // the old DECIMAL(28,4) sum × 1e4, reconstructed by one exact
-      // ×1e-4 decimal multiply — so the emitted doubles (and the oracle
-      // hash) are bit-identical. l_partkey/l_suppkey are IDs whose
-      // magnitude GROWS with scale (their cents-products pass 9.2e18
-      // around SF ~150), so their moments keep the decimal path.
+      // The product moments among PRICE-DOMAIN columns (extendedprice,
+      // quantity, discount, tax: bounded by the data contract, never by
+      // corpus size) take Num's cents-LONG form, one long multiply per
+      // row instead of a BigDecimal multiply + changePrecision, rescaled
+      // ×1e-4 to the DECIMAL(28,4) sums the oracle takes. l_partkey and
+      // l_suppkey are IDs whose magnitude GROWS with scale (their
+      // cents-products pass 9.2e18 around SF ~150), so their moments keep
+      // the decimal path.
       val longPath = Set("l_quantity", "l_discount", "l_tax")
-      val e4 = lit(new java.math.BigDecimal("0.0001"))
-      def toDouble4(c: Column): Column = (c * e4).cast(DoubleType)
       val aggs = scala.collection.mutable.ArrayBuffer[org.apache.spark.sql.Column](
         count(lit(1)).as("n"),
         sum(yd).cast(DoubleType).as("sy"),
-        sum((yc * yc).cast(dec38)).as("syy_r"),
-        max(abs(yc)).as("mx_y"))
+        Num.sumCentsProd(yc, yc).as("syy_r"))
       for (f <- KBestFeatures) {
         val fd = col(f).cast(dec2)
         aggs += sum(fd).cast(DoubleType).as(s"sx_$f")
         if (longPath(f)) {
           val fc = Num.cents(col(f))
-          aggs += sum((fc * fc).cast(dec38)).as(s"sxx_${f}_r")
-          aggs += sum((fc * yc).cast(dec38)).as(s"sxy_${f}_r")
-          aggs += max(abs(fc)).as(s"mx_$f")
+          aggs += Num.sumCentsProd(fc, fc).as(s"sxx_${f}_r")
+          aggs += Num.sumCentsProd(fc, yc).as(s"sxy_${f}_r")
         } else {
           aggs += sum((fd * fd).cast(dec4)).cast(DoubleType).as(s"sxx_$f")
           aggs += sum((fd * yd).cast(dec4)).cast(DoubleType).as(s"sxy_$f")
         }
       }
-      val centsBound = 3000000000L
-      val guard = (longPath.toSeq.sorted.map(f => col(s"mx_$f")) :+ col("mx_y"))
-        .map(_ <= centsBound).reduce(_ && _)
-      val g = li.agg(aggs.head, aggs.tail.toSeq: _*)
-        .filter(assert_true(guard,
-          lit("ml_select_kbest: a cents value exceeds the long-product " +
-            "envelope (3.0e9); route that column through the decimal path"))
-          .isNull)
-        .select((col("n") +: col("sy") +: toDouble4(col("syy_r")).as("syy") +:
+      def toDouble4(c: String): Column = Num.fromCents2(col(c)).cast(DoubleType)
+      val exact = "syy_r" +: longPath.toSeq.sorted.flatMap(f =>
+        Seq(s"sxx_${f}_r", s"sxy_${f}_r"))
+      val g = Num.exactOrRaise(li.agg(aggs.head, aggs.tail.toSeq: _*),
+          "ml_select_kbest", col("n"), exact.map(col): _*)
+        .select((col("n") +: col("sy") +: toDouble4("syy_r").as("syy") +:
           KBestFeatures.flatMap { f =>
             if (longPath(f)) Seq(col(s"sx_$f"),
-              toDouble4(col(s"sxx_${f}_r")).as(s"sxx_$f"),
-              toDouble4(col(s"sxy_${f}_r")).as(s"sxy_$f"))
+              toDouble4(s"sxx_${f}_r").as(s"sxx_$f"),
+              toDouble4(s"sxy_${f}_r").as(s"sxy_$f"))
             else Seq(col(s"sx_$f"), col(s"sxx_$f"), col(s"sxy_$f"))
           }): _*)
       val entries = KBestFeatures.map { f =>
@@ -549,7 +561,6 @@ object MlPack extends QueryPack {
     // (at 100 TB the ranked table persists once and both uses read it),
     // one broadcast of 5 fold coefficient rows.
     "ml_backtest" -> ((s, dir) => {
-      val d38 = DecimalType(38, 0)
       val ranked0 = timeRanked(s, dir)._1
       val ranked = ranked0.join(
         ranked0.select((col("r") + 1).as("r"), col("y").as("y_prev")),
@@ -559,19 +570,8 @@ object MlPack extends QueryPack {
       val folds = s.range(0, 5).toDF("fold")
       val tagged = ranked.crossJoin(broadcast(t)).crossJoin(broadcast(folds))
         .withColumn("start", col("n") - (lit(5) - col("fold")) * col("ts_sz"))
-      val coef = tagged.filter(col("r") < col("start"))
-        .groupBy("fold").agg(
-          count(lit(1)).as("n_train"),
-          sum(col("r").cast(d38)).as("sr"),
-          sum(col("y").cast(d38)).as("sy"),
-          sum((col("r").cast(d38) * col("y")).cast(d38)).as("sry"),
-          sum((col("r").cast(d38) * col("r")).cast(d38)).as("srr"))
-        .withColumn("b",
-          (col("n_train").cast(d38) * col("sry") - col("sr") * col("sy")).cast(DoubleType) /
-          (col("n_train").cast(d38) * col("srr") - col("sr") * col("sr")).cast(DoubleType))
-        .withColumn("a",
-          (col("sy").cast(DoubleType) - col("b") * col("sr").cast(DoubleType)) /
-            col("n_train").cast(DoubleType))
+      val coef = trendFit(tagged.filter(col("r") < col("start")), Seq("fold"),
+        None, "ml_backtest")
       tagged
         .filter(col("r") >= col("start") && col("r") < col("start") + col("ts_sz"))
         .join(broadcast(coef), "fold")
@@ -582,9 +582,9 @@ object MlPack extends QueryPack {
         .groupBy("fold").agg(
           max(col("n_train")).as("n_train"),
           count(lit(1)).as("n_test"),
-          Num.r6(sum(abs(col("e_naive")).cast(d38)).cast(DoubleType) / count(lit(1)))
-            .as("naive_mae_cents"),
-          Num.r6(sqrt(sum((col("e_naive").cast(d38) * col("e_naive")).cast(d38))
+          Num.r6(sum(abs(col("e_naive")).cast(Num.Exact)).cast(DoubleType) /
+            count(lit(1))).as("naive_mae_cents"),
+          Num.r6(sqrt(Num.sumProd(col("e_naive"), col("e_naive"))
             .cast(DoubleType) / count(lit(1)))).as("naive_rmse_cents"),
           Num.r6(sum(abs(col("e_trend"))).cast(DoubleType) / count(lit(1)))
             .as("trend_mae_cents"),
@@ -605,7 +605,7 @@ object MlPack extends QueryPack {
     "ml_grid_search" -> ((s, dir) => ridgeCvSearch(s, dir, GridAlphasPpm)),
 
     // Randomized hyperparameter search (m_eval cell 41's
-    // RandomizedSearchCV, VERDICT r10 next #6): the SAME one-plan CV
+    // RandomizedSearchCV): the SAME one-plan CV
     // machinery as ml_grid_search, but the candidate set is a
     // hash-seeded random SUBSET of a 40-point cubic-spaced shrinkage
     // space — sklearn's param sampling made deterministic (an LCG keys
@@ -632,7 +632,6 @@ object MlPack extends QueryPack {
     // candidate grid never leaves the driver+broadcast.
     "ml_halving_search" -> ((s, dir) => {
       import s.implicits._
-      val d38 = DecimalType(38, 0)
       // the ranked fact table persists for the query's lifetime: the
       // halving rounds are sequential by nature, and without the cache
       // each round's prefix-moment and test-span scans would re-run the
@@ -647,8 +646,7 @@ object MlPack extends QueryPack {
       val tsSz = n / 6
       val ntf = n - tsSz
       val rounds = 3
-      // fail loudly on a degenerate fixture (ADVICE r7): an empty round-0
-      // train prefix would make the moment row 0/0 → NaN coefficients and
+      // fail loudly on a degenerate fixture: an empty round-0 train prefix would make the moment row 0/0 → NaN coefficients and
       // arbitrarily-ranked NaN rmse, silently. n ≥ 24 guarantees tsSz ≥ 4
       // and a non-empty smallest prefix ntf/2^(rounds-1).
       require(n >= 24 && ntf / (1L << (rounds - 1)) > 0,
@@ -659,20 +657,8 @@ object MlPack extends QueryPack {
       for (i <- 0 until rounds) {
         val nTr = ntf / (1L << (rounds - 1 - i))
         val al = survivors.toDF("alpha_ppm")
-        val coef = ranked.filter(col("r") < nTr).agg(
-            count(lit(1)).as("n_train"),
-            sum(col("r").cast(d38)).as("sr"),
-            sum(col("y").cast(d38)).as("sy"),
-            sum((col("r").cast(d38) * col("y")).cast(d38)).as("sry"),
-            sum((col("r").cast(d38) * col("r")).cast(d38)).as("srr"))
-          .crossJoin(broadcast(al))
-          .withColumn("b",
-            (col("n_train").cast(d38) * col("sry") - col("sr") * col("sy")).cast(DoubleType) /
-            ((col("n_train").cast(d38) * col("srr") - col("sr") * col("sr")).cast(DoubleType) *
-              (lit(1.0) + col("alpha_ppm").cast(DoubleType) / lit(1000000.0))))
-          .withColumn("a",
-            (col("sy").cast(DoubleType) - col("b") * col("sr").cast(DoubleType)) /
-              col("n_train").cast(DoubleType))
+        val coef = trendFit(ranked.filter(col("r") < nTr), Nil, Some(al),
+          "ml_halving_search")
         val scored = test.crossJoin(broadcast(coef))
           .withColumn("e",
             (col("y").cast(DoubleType) - (col("a") + col("b") * col("r").cast(DoubleType)))
@@ -827,15 +813,15 @@ object MlPack extends QueryPack {
       val w = rows
         .select(col("s"), posexplode(col("e6")).as(Seq("pos", "el")))
         .groupBy("pos")
-        // el cast BEFORE the multiply (the t19 discipline): a BIGINT
-        // el*s wraps silently past ~380-magnitude elements where the
-        // oracle's HUGEINT product stays exact
+        // el is cast to a decimal before the multiply: a BIGINT el*s
+        // wraps past ~380-magnitude elements where the oracle's HUGEINT
+        // product stays exact
         .agg(sum((col("el").cast(DecimalType(19, 0)) * col("s"))
-          .cast(DecimalType(38, 0))).as("w"))
+          .cast(Num.Exact)).as("w"))
         .withColumn("wp", expr("CAST(w div 1000000 AS DECIMAL(38,0))"))
       val scal = w.agg(
-        sum((col("wp") * col("wp")).cast(DecimalType(38, 0))).as("n2"),
-        sum(col("wp")).cast(DecimalType(38, 0)).as("sw"),
+        sum((col("wp") * col("wp")).cast(Num.Exact)).as("n2"),
+        sum(col("wp")).cast(Num.Exact).as("sw"),
         count(lit(1)).as("nd"))
       w.crossJoin(broadcast(scal))
         .select(col("pos"),
@@ -882,14 +868,14 @@ object MlPack extends QueryPack {
             .as("mean_y"),
           Num.r6((
             (col("sxx") * col("gy") - col("sx") * col("gx"))
-              .cast(DecimalType(38, 0)) * 2).cast(DoubleType)
+              .cast(Num.Exact) * 2).cast(DoubleType)
             / (col("n") * col("sxx") - col("sx") * col("sx"))
-              .cast(DecimalType(38, 0)).cast(DoubleType)).as("beta0"),
+              .cast(Num.Exact).cast(DoubleType)).as("beta0"),
           Num.r6((
             (col("n") * col("gx") - col("sx") * col("gy"))
-              .cast(DecimalType(38, 0)) * 200000).cast(DoubleType)
+              .cast(Num.Exact) * 200000).cast(DoubleType)
             / (col("n") * col("sxx") - col("sx") * col("sx"))
-              .cast(DecimalType(38, 0)).cast(DoubleType)).as("beta1_per_kusd"))
+              .cast(Num.Exact).cast(DoubleType)).as("beta1_per_kusd"))
     }),
 
     // k-means pays per iteration, which is how MLlib's own KMeans
@@ -979,45 +965,33 @@ object MlPack extends QueryPack {
     // closed-form regression pattern: ONE map-side-combinable agg pass
     // collects the 9 Gram/moment sums (X'X and X'y for 2 features +
     // intercept) in EXACT integer arithmetic (qty is integral, discount
-    // and price are 2-decimal → scaled to exact longs; every product is
-    // ≤ 5e8 per row so the 60k-row sums sit far inside BIGINT), then the
-    // 3×3 system is solved in closed form by Cramer's rule as a fixed
-    // IEEE-double expression tree over those exact moments — bit-identical
-    // across engines because the INPUTS are exact integers and both sides
-    // evaluate the same op DAG. No per-row FP sum ever crosses engines
-    // (row order would perturb the last bits). At 100 TB the plan is
-    // unchanged: partial_sum → exchange(1 row/grouping) → final_sum; the
-    // driver never sees data, only the 9 moments. Design note at scale:
-    // the exact-integer envelope is sums < 2^63 — at ~1e13 per 60k rows
-    // the 100 TB headroom is ~1e5×, and beyond that the same pass runs on
-    // DECIMAL(38,0) unchanged.
+    // and price are 2-decimal → scaled to exact longs, the sums of
+    // products take Num's cents-LONG form: value-domain integers, one LONG
+    // multiply per row), then the 3×3 system is solved in
+    // closed form by Cramer's rule as a fixed IEEE-double expression tree
+    // over those exact moments — bit-identical across engines because
+    // the INPUTS are exact integers and both sides evaluate the same op
+    // DAG. No per-row FP sum ever crosses engines (row order would
+    // perturb the last bits). At 100 TB the plan is unchanged:
+    // partial_sum → exchange(1 row/grouping) → final_sum; the driver
+    // never sees data, only the 9 moments.
     "ml_linreg_normal" -> ((s, dir) => {
       val li = Tables.lineitem(s, dir).select(
         col("l_quantity").cast("long").as("x1"),
         floor(col("l_discount") * 100 + 0.5).cast("long").as("x2"),
         floor(col("l_extendedprice") * 100 + 0.5).cast("long").as("y"))
-      val m = li.agg(
-        count(lit(1)).as("n0"),
-        sum(col("x1")).as("s1"), sum(col("x2")).as("s2"),
-        sum(col("y")).as("sy"),
-        sum(col("x1") * col("x1")).as("s11"),
-        sum(col("x1") * col("x2")).as("s12"),
-        sum(col("x2") * col("x2")).as("s22"),
-        sum(col("x1") * col("y")).as("s1y"),
-        sum(col("x2") * col("y")).as("s2y"))
+      def sp(a: String, b: String) = Num.sumCentsProd(col(a), col(b))
+      val moments = Seq("s1" -> sum(col("x1").cast(Num.Exact)),
+        "s2" -> sum(col("x2").cast(Num.Exact)), "sy" -> sum(col("y").cast(Num.Exact)),
+        "s11" -> sp("x1", "x1"), "s12" -> sp("x1", "x2"), "s22" -> sp("x2", "x2"),
+        "s1y" -> sp("x1", "y"), "s2y" -> sp("x2", "y"))
+      val m = Num.exactOrRaise(
+        li.agg(count(lit(1)).as("n0"), moments.map { case (k, c) => c.as(k) }: _*),
+        "ml_linreg_normal", col("n0"), moments.map(k => col(k._1)): _*)
       // Cramer on doubles from exact integer moments; expression tree
       // mirrored TEXTUALLY in the oracle (same IEEE ops, same order).
-      val d = m.select(
-        col("n0").cast(DoubleType).as("n"),
-        col("s1").cast(DoubleType).as("s1"),
-        col("s2").cast(DoubleType).as("s2"),
-        col("sy").cast(DoubleType).as("sy"),
-        col("s11").cast(DoubleType).as("s11"),
-        col("s12").cast(DoubleType).as("s12"),
-        col("s22").cast(DoubleType).as("s22"),
-        col("s1y").cast(DoubleType).as("s1y"),
-        col("s2y").cast(DoubleType).as("s2y"),
-        col("n0"))
+      val d = m.select((col("n0").cast(DoubleType).as("n") +:
+        moments.map(k => col(k._1).cast(DoubleType).as(k._1)) :+ col("n0")): _*)
       val det = col("n") * (col("s11") * col("s22") - col("s12") * col("s12")) -
         col("s1") * (col("s1") * col("s22") - col("s12") * col("s2")) +
         col("s2") * (col("s1") * col("s12") - col("s11") * col("s2"))
@@ -1146,29 +1120,14 @@ object MlPack extends QueryPack {
   private def ridgeCvSearch(s: SparkSession, dir: String,
       alphasPpm: Seq[Long]): DataFrame = {
     import s.implicits._
-    val d38 = DecimalType(38, 0)
     val ranked = timeRanked(s, dir)._1
     val t = ranked.agg(count(lit(1)).as("n"),
       (count(lit(1)) / lit(6)).cast("long").as("ts_sz"))
     val folds = s.range(0, 5).toDF("fold")
     val tagged = ranked.crossJoin(broadcast(t)).crossJoin(broadcast(folds))
       .withColumn("start", col("n") - (lit(5) - col("fold")) * col("ts_sz"))
-    val alphas = alphasPpm.toDF("alpha_ppm")
-    val coef = tagged.filter(col("r") < col("start"))
-      .groupBy("fold").agg(
-        count(lit(1)).as("n_train"),
-        sum(col("r").cast(d38)).as("sr"),
-        sum(col("y").cast(d38)).as("sy"),
-        sum((col("r").cast(d38) * col("y")).cast(d38)).as("sry"),
-        sum((col("r").cast(d38) * col("r")).cast(d38)).as("srr"))
-      .crossJoin(broadcast(alphas))
-      .withColumn("b",
-        (col("n_train").cast(d38) * col("sry") - col("sr") * col("sy")).cast(DoubleType) /
-        ((col("n_train").cast(d38) * col("srr") - col("sr") * col("sr")).cast(DoubleType) *
-          (lit(1.0) + col("alpha_ppm").cast(DoubleType) / lit(1000000.0))))
-      .withColumn("a",
-        (col("sy").cast(DoubleType) - col("b") * col("sr").cast(DoubleType)) /
-          col("n_train").cast(DoubleType))
+    val coef = trendFit(tagged.filter(col("r") < col("start")), Seq("fold"),
+      Some(alphasPpm.toDF("alpha_ppm")), "ml_grid_search / ml_random_search")
     val scored = tagged
       .filter(col("r") >= col("start") && col("r") < col("start") + col("ts_sz"))
       .join(broadcast(coef), "fold")

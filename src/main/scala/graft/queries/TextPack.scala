@@ -617,9 +617,9 @@ object TextPack extends QueryPack {
     // (never a one-task window — the
     // vocabulary at web scale is billions of types), then an OLS slope
     // whose every term is exact: ln(rank)/ln(freq) round ONCE to e6
-    // fixed-point, the moment sums accumulate in DECIMAL(38,0) (operands
-    // cast before the product — BIGINT x·y sums overflow past ~1e6
-    // types), and the slope is one IEEE division of two exact integers.
+    // fixed-point, the moment sums and centred terms are exact Num moments
+    // (BIGINT x·y sums overflow past ~1e6 types), and the slope is one
+    // IEEE division of two exact integers.
     // Sliding-window chunking with overlap — the pretraining/RAG
     // document splitter: fixed 50-word windows at stride 40 (10-word
     // overlap), the tail chunk allowed short. Entirely MAP-ONLY: the
@@ -676,17 +676,18 @@ object TextPack extends QueryPack {
           .as("x_e6"),
         expr("CAST(floor(ln(CAST(freq AS DOUBLE)) * 1000000 + 0.5) AS BIGINT)")
           .as("y_e6"))
-      pts.agg(count(lit(1)).as("n"),
-          sum(col("x_e6").cast("decimal(38,0)")).as("sx"),
-          sum(col("y_e6").cast("decimal(38,0)")).as("sy"),
-          sum(col("x_e6").cast("decimal(38,0)") * col("y_e6")).as("sxy"),
-          sum(col("x_e6").cast("decimal(38,0)") * col("x_e6")).as("sxx"))
+      val m = pts.agg(count(lit(1)).as("n"),
+          sum(col("x_e6").cast(Num.Exact)).as("sx"),
+          sum(col("y_e6").cast(Num.Exact)).as("sy"),
+          Num.sumProd(col("x_e6"), col("y_e6")).as("sxy"),
+          Num.sumProd(col("x_e6"), col("x_e6")).as("sxx"))
+        .select(col("n"),
+          Num.centred(col("n"), col("sxy"), col("sx"), col("sy")).as("cxy"),
+          Num.centred(col("n"), col("sxx"), col("sx"), col("sx")).as("cxx"))
+      Num.exactOrRaise(m, "t19_zipf_slope", col("n"), col("cxy"), col("cxx"))
         .select(col("n").as("n_types"),
-          Num.r6(
-            (col("n").cast("decimal(38,0)") * col("sxy") -
-              col("sx") * col("sy")).cast("double") /
-            (col("n").cast("decimal(38,0)") * col("sxx") -
-              col("sx") * col("sx")).cast("double")).as("zipf_slope"))
+          Num.r6(col("cxy").cast("double") / col("cxx").cast("double"))
+            .as("zipf_slope"))
     }),
 
     // DSIR-style importance weighting (Xie et al. 2023, "Data Selection
@@ -737,8 +738,8 @@ object TextPack extends QueryPack {
         .select(col("doc_id"), col("lang"), col("n_words"), col("n_bigrams"),
           Num.r6(col("s_e6").cast("double") /
             (col("n_bigrams") * lit(1000000.0))).as("avg_logw"),
-          (col("s_e6").cast("decimal(38,0)") * col("tn") >
-            col("ts").cast("decimal(38,0)") * col("n_bigrams"))
+          (col("s_e6").cast(Num.Exact) * col("tn") >
+            col("ts").cast(Num.Exact) * col("n_bigrams"))
             .as("selected"))
     }),
 
@@ -809,8 +810,8 @@ object TextPack extends QueryPack {
         .select(col("doc_id"),
           explode(split(trim(col("text")), "\\s+")).as("term"))
         .groupBy("term", "doc_id").agg(count(lit(1)).as("tf"))
-      tf.filter(assert_true(col("tf") < 1048576L,
-          lit("t24: tf exceeds the 2^20 posting-packing envelope")).isNull)
+      Num.check(tf, "t24: tf exceeds the 2^20 posting-packing envelope",
+          col("tf") < 1048576L)
         .select(col("term"), (col("doc_id") / lit(4096)).cast("long").as("block"),
           (col("doc_id") * lit(1048576L) + col("tf")).as("posting"))
         .groupBy("term", "block")

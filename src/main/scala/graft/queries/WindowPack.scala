@@ -151,7 +151,7 @@ object WindowPack extends QueryPack {
     // (n < 20 or zero variance) yield NULL.
     "w18_rolling_skew" -> ((s, dir) => {
       val f = w.rowsBetween(-19, 0)
-      val d38 = DecimalType(38, 0)
+      val d38 = Num.Exact
       base(s, dir)
         .withColumn("xc",
           expr("CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT)"))
@@ -193,22 +193,23 @@ object WindowPack extends QueryPack {
     // axis from the per-key windows above: stats come from ONE day-keyed
     // partial agg over exact integer cents (n, Σc, Σc²), the ~30-row
     // stats table attaches by broadcast, and the z itself is map-only.
-    // FP discipline: the variance term n·Σc² − (Σc)² is computed in
-    // DECIMAL(38,0) (operands cast BEFORE the product — a BIGINT product
-    // overflows near ~1e6 rows/day of 1e5-cent values) and converted to
-    // double once; the z expression replays token-for-token in the
-    // oracle. Degenerate days (n < 2 or zero variance) yield NULL.
+    // FP discipline: Σc² and the variance term n·Σc² − (Σc)² are exact
+    // Num moments (a LONG Σc² wraps at two values of 3e7 on one day) and
+    // the term is converted to double once; the z expression replays
+    // token-for-token in the oracle. Degenerate days (n < 2 or zero
+    // variance) yield NULL.
     "w16_cross_sectional_z" -> ((s, dir) => {
       val ev = Tables.events(s, dir)
         .select(col("event_id"), col("user_id"),
           col("ts").cast("date").as("day"),
           expr("CAST(round(value * 100) AS BIGINT)").as("c"))
       val stats = ev.groupBy("day").agg(count(lit(1)).as("n"),
-        sum("c").as("sc"), sum(col("c") * col("c")).as("sc2"))
-      ev.join(broadcast(stats), "day")
+          sum("c").as("sc"), Num.sumProd(col("c"), col("c")).as("sc2"))
         .withColumn("vt",
-          (col("n").cast("decimal(38,0)") * col("sc2") -
-            col("sc").cast("decimal(38,0)") * col("sc")).cast("double"))
+          Num.centred(col("n"), col("sc2"), col("sc"), col("sc")))
+      ev.join(broadcast(Num.exactOrRaise(stats, "w16_cross_sectional_z",
+          col("n"), col("vt"))), "day")
+        .withColumn("vt", col("vt").cast("double"))
         .select(col("event_id"), col("day"), col("user_id"),
           when(col("n") >= 2 && col("vt") > 0,
             Num.r6((col("n") * col("c") - col("sc")).cast("double") /
