@@ -238,34 +238,15 @@ object Num {
   /** Column `name` cast to `t`, non-nullable, raising on a null row: the
     * contract of a primitive-typed decode such as `.as[(Long, Double)]`,
     * which the (key, value) rank frames' output schemas still carry. */
-  def required(name: String, t: DataType): org.apache.spark.sql.Column = {
+  def required(name: String, t: DataType): org.apache.spark.sql.Column =
+    nonNull(col(name).cast(t)).as(name)
+
+  /** `c`, non-nullable, raising on a null row: the schema of a value the
+    * driver used to compute as a primitive (a Scala Boolean or Long). */
+  def nonNull(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column = {
     import org.apache.spark.sql.GraftSqlShim.{column, expression}
     column(org.apache.spark.sql.catalyst.expressions.objects.AssertNotNull(
-      expression(col(name).cast(t)))).as(name)
-  }
-}
-
-/** Driver-side concurrency for independent job-submitting builds. */
-object Par {
-  /** Evaluates two independent builds on FRESH threads so any Spark jobs
-    * they submit overlap instead of serializing (guide §2.6 — the
-    * scheduler happily runs several jobs at once; actions are only
-    * sequential because the driver calls them sequentially). Used where
-    * a query constructs two independent intermediates that each pay a
-    * collect-style job (e.g. one prefix-sum pass per rank variable).
-    * Fresh threads, never a pooled executor: Spark's job group / job
-    * description live in InheritableThreadLocals, which copy at THREAD
-    * CREATION — so the caller's watchdog job group (Guard.timed) covers
-    * both builds, while pooled threads created before the group was set
-    * would escape its cancel. */
-  def both[A, B](fa: => A, fb: => B): (A, B) = {
-    var ra: Either[Throwable, A] = null
-    var rb: Either[Throwable, B] = null
-    val ta = new Thread(() => { ra = try Right(fa) catch { case e: Throwable => Left(e) } })
-    val tb = new Thread(() => { rb = try Right(fb) catch { case e: Throwable => Left(e) } })
-    ta.setDaemon(true); tb.setDaemon(true)
-    ta.start(); tb.start(); ta.join(); tb.join()
-    (ra.fold(e => throw e, identity), rb.fold(e => throw e, identity))
+      expression(c)))
   }
 }
 

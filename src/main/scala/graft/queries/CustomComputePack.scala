@@ -251,6 +251,7 @@ object CustomComputePack extends QueryPack {
       val moments = paired.filter(col("xc").isNotNull)
         .groupBy(col("user_id"))
         .agg(
+          count(lit(1)).as("pairs"),
           count(lit(1)).cast(DecimalType(6, 0)).as("n"),
           sum(col("xc")).cast(DecimalType(14, 0)).as("sx"),
           sum(col("yc")).cast(DecimalType(14, 0)).as("sy"),
@@ -258,19 +259,23 @@ object CustomComputePack extends QueryPack {
             .cast(DecimalType(18, 0)).as("sxy"),
           sum((col("xc") * col("xc")).cast(DecimalType(21, 0)))
             .cast(DecimalType(18, 0)).as("sxx"))
-        .filter(col("n") >= 3)
+        .filter(col("pairs") >= 3)
         .withColumn("p",
           (col("n") * col("sxy") - col("sx") * col("sy")).cast(DecimalType(19, 0)))
         .withColumn("q",
           (col("n") * col("sxx") - col("sx") * col("sx")).cast(DecimalType(19, 0)))
       // the decimal precisions above are sized for the fixture envelope
-      // (2-decimal values, |value| ≲ 1e4, series ≲ 1e4 rows); an
+      // (2-decimal values, |value| ≲ 1e4, series < 1e6 pairs); an
       // out-of-envelope fixture overflows a cast to NULL, and the q≠0
       // filter would then silently DROP the series while the HUGEINT
-      // oracle keeps it, so a NULL p or q raises
-      val sums = Num.exactOrRaise(moments, "stats_ar1_forecast", col("n"),
-          col("p"), col("q"))
-        .filter(col("q") =!= 0)
+      // oracle keeps it, so a NULL n, p or q raises. The filter above and
+      // the check read the LONG pair count, which no cast can turn NULL;
+      // the decimal n stays the arithmetic operand. The q≠0 filter keeps a
+      // NULL q: Catalyst merges it with the check and would put an
+      // inferred isnotnull(q) in front, dropping the row unchecked
+      val sums = Num.exactOrRaise(moments, "stats_ar1_forecast", col("pairs"),
+          col("n"), col("p"), col("q"))
+        .filter(!(col("q") <=> 0))
       val lastv = paired.filter(col("rn_last") === 1)
         .select(col("user_id"), col("yc").as("x_last"))
       // the same check for the per-row residual products (n·Q·y peaks

@@ -1,8 +1,9 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.{QueryPack, Ranks, Tables}
+import org.apache.spark.sql.types.DoubleType
+import graft.{Num, QueryPack, Ranks, Tables}
 
 /** Projections / filters / predicates (SURVEY §2.2 P1–P11). */
 object ProjectionPack extends QueryPack {
@@ -67,28 +68,22 @@ object ProjectionPack extends QueryPack {
 
     // P10b: seeded row sample (preprocessing.py:17-19 df.sample) — the
     // selected rows are engine-specific, so the driver-checked output is an
-    // invariant frame: sample ⊆ input (anti-join empty) and the sample size
-    // within 4σ of Binomial(n, 0.1); DuckDB independently recomputes n.
+    // invariant frame: sample ⊆ input (no unmatched sample row) and the
+    // sample size within 4σ of Binomial(n, 0.1); DuckDB independently
+    // recomputes n. One plan: the input full-outer-joined with its sample
+    // and aggregated once ([[sampleCensus]]), no driver action.
     "p12_sample" -> ((s, dir) => {
-      import s.implicits._
-      val orders = Tables.orders(s, dir).select("o_orderkey", "o_totalprice")
-      val sample = orders.sample(withReplacement = false, 0.1, seed = 42L)
-      val k = sample.count()
-      val nonSubset = sample
-        .join(orders, Seq("o_orderkey", "o_totalprice"), "left_anti").count()
-      val n = orders.count()
       val p = 0.1
-      val inBounds = math.abs(k - n * p) <= 4.0 * math.sqrt(n * p * (1 - p))
-      Seq((n, nonSubset == 0L, inBounds))
-        .toDF("n_input", "sample_subset_of_input", "count_within_4sigma")
+      val orders = Tables.orders(s, dir).select("o_orderkey", "o_totalprice")
+      val sample = orders.sample(withReplacement = false, p, seed = 42L)
+      sampleCensus(orders, sample, Seq("o_orderkey", "o_totalprice"))
+        .agg(count(col("in_input")).as("n"), count(col("in_sample")).as("k"),
+          unmatched)
+        .select(col("n").as("n_input"),
+          (col("unmatched") === 0).as("sample_subset_of_input"),
+          within4Sigma(col("k"), col("n"), p, 0.0).as("count_within_4sigma"))
     }),
 
-    // P10 variant: STRATIFIED sampling (df.stat.sampleBy) — per-stratum
-    // Bernoulli fractions, the training-data recipe for rebalancing a
-    // skewed source (e.g. per-language document quotas). Invariant frame:
-    // seeded sample ⊆ input, and each stratum's size lands within 4σ of
-    // its binomial expectation. Per-stratum counts are a 3-row collect
-    // (bounded by stratum cardinality, not data size).
     // Weighted sampling, EXACTLY k and exactly replayable: systematic
     // (equal-spaced) selection over the cumulative weight line — the
     // particle-filter/low-variance resampler. Each doc owns the weight
@@ -117,24 +112,32 @@ object ProjectionPack extends QueryPack {
         .select(col("doc_id"), col("w"), col("n_copies"))
     }),
 
+    // P10 variant: STRATIFIED sampling (df.stat.sampleBy) — per-stratum
+    // Bernoulli fractions, the training-data recipe for rebalancing a
+    // skewed source (e.g. per-language document quotas). Invariant frame:
+    // seeded sample ⊆ input, and each stratum's size lands within 4σ of
+    // its binomial expectation (a stratum absent from the input has
+    // n = k = 0, which passes). One plan: the census is aggregated once,
+    // with each stratum's n and k as conditional counts; n_strata counts
+    // the input's distinct non-null strata, as the oracle's
+    // count(DISTINCT) does.
     "p13_stratified_sample" -> ((s, dir) => {
-      import s.implicits._
-      val fracs = Map("O" -> 0.05, "F" -> 0.10, "P" -> 0.20)
+      val fracs = Seq("O" -> 0.05, "F" -> 0.10, "P" -> 0.20)
       val orders = Tables.orders(s, dir).select("o_orderkey", "o_orderstatus")
-      val sample = orders.stat.sampleBy("o_orderstatus", fracs, 7L)
-      val nonSubset = sample
-        .join(orders, Seq("o_orderkey", "o_orderstatus"), "left_anti").count()
-      val perStratum = orders.groupBy("o_orderstatus").count()
-        .as[(String, Long)].collect().toMap
-      val perSample = sample.groupBy("o_orderstatus").count()
-        .as[(String, Long)].collect().toMap
-      val allWithin = fracs.forall { case (stratum, p) =>
-        val n = perStratum.getOrElse(stratum, 0L)
-        val got = perSample.getOrElse(stratum, 0L).toDouble
-        math.abs(got - n * p) <= 4.0 * math.sqrt(n * p * (1 - p)) + 1
-      }
-      Seq((perStratum.size.toLong, nonSubset == 0L, allWithin))
-        .toDF("n_strata", "sample_subset_of_input", "per_stratum_within_4sigma")
+      val sample = orders.stat.sampleBy("o_orderstatus", fracs.toMap, 7L)
+      def rowsIn(side: String, stratum: String) =
+        count(when(col(side) && col("o_orderstatus") === stratum, 1))
+      sampleCensus(orders, sample, Seq("o_orderkey", "o_orderstatus"))
+        .agg(size(collect_set(when(col("in_input"), col("o_orderstatus"))))
+            .cast("long").as("n_strata"),
+          unmatched +: fracs.flatMap { case (st, _) =>
+            Seq(rowsIn("in_input", st).as(s"n_$st"), rowsIn("in_sample", st).as(s"k_$st"))
+          }: _*)
+        .select(col("n_strata"),
+          (col("unmatched") === 0).as("sample_subset_of_input"),
+          fracs.map { case (st, p) =>
+            within4Sigma(col(s"k_$st"), col(s"n_$st"), p, 1.0)
+          }.reduce(_ && _).as("per_stratum_within_4sigma"))
     }),
 
     // P11: conditional value mask (preprocessing.py:339-340, the RSI
@@ -165,6 +168,30 @@ object ProjectionPack extends QueryPack {
         tieCols = Seq("event_id"), k = 5)
     })
   )
+
+  /** The input full-outer-joined with its seeded sample on `keys`: each
+    * row marks `in_input` and/or `in_sample`, so one aggregate counts the
+    * input, the sample, and the sample rows the input does not hold
+    * ([[unmatched]]). */
+  private def sampleCensus(input: DataFrame, sample: DataFrame,
+      keys: Seq[String]): DataFrame =
+    input.withColumn("in_input", lit(true))
+      .join(sample.withColumn("in_sample", lit(true)), keys, "full_outer")
+
+  /** The sample rows of a [[sampleCensus]] that the input does not hold. */
+  private def unmatched: Column =
+    count(when(col("in_input").isNull, 1)).as("unmatched")
+
+  /** |k − n·p| ≤ 4·√(n·p·(1 − p)) + slack, in the operand order of the
+    * driver-side double arithmetic it replaces, and like its Boolean never
+    * null. */
+  private def within4Sigma(k: Column, n: Column, p: Double,
+      slack: Double): Column = {
+    val np = n.cast(DoubleType) * p
+    val bound = lit(4.0) * sqrt(np * (lit(1.0) - p))
+    Num.nonNull(abs(k.cast(DoubleType) - np) <=
+      (if (slack == 0.0) bound else bound + slack))
+  }
 
   def oracleSql: Map[String, String] = Map(
     "p15_reservoir_per_key" ->

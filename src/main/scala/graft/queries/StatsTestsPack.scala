@@ -305,15 +305,17 @@ object StatsTestsPack extends QueryPack {
     "stats_kaplan_meier" -> ((s, dir) => {
       val purchases = Tables.events(s, dir)
         .filter(col("event_type") === "purchase")
-      val horizon = purchases
-        .agg(max(to_date(col("ts"))).as("mx")).head().getDate(0)
+      // the horizon is a one-row aggregate broadcast into the per-user
+      // table, so the answer is one plan
+      val horizon = purchases.agg(max(to_date(col("ts"))).as("horizon"))
       val users = purchases
         .groupBy(col("user_id"))
         .agg(min(to_date(col("ts"))).as("first_d"),
           max(to_date(col("ts"))).as("last_d"))
+        .crossJoin(broadcast(horizon))
         .select(
           datediff(col("last_d"), col("first_d")).cast("long").as("dur"),
-          (datediff(lit(horizon), col("last_d")) > 3).cast("long").as("death"))
+          (datediff(col("horizon"), col("last_d")) > 3).cast("long").as("death"))
       val cells = users.groupBy(col("dur"))
         .agg(count(lit(1)).as("n_at"), sum(col("death")).as("d_at"))
       val wDesc = Window.partitionBy(lit(1)).orderBy(col("dur").desc)
@@ -620,44 +622,35 @@ object StatsTestsPack extends QueryPack {
     0.06694678963061322, 0.05799194697768673, 0.05115252244738129,
     0.04575749056067514)
 
-  /** Tie-averaged ranks in DOUBLED integer space for `valCol` of `rows`,
-    * as a (value → rank) TYPE TABLE: distinct values get one prefix-sum
-    * pass (avg doubled rank r2 = 2·(below) + cnt + 1, exact Longs) —
-    * never a corpus-wide row_number window. The caller joins it back to
-    * the rows on the value. Returning the bounded type table, not the
-    * rows joined with their ranks, lets both variables' rank tables build
-    * independently from the raw rows (no y type table built by scanning
-    * the x-ranked stream) and attach in one two-probe join at the end. */
-  private def doubledRankTable(rows: DataFrame, valCol: String,
-      rankCol: String): DataFrame = {
-    val tt = rows.groupBy(col(valCol)).agg(count(lit(1)).as("cnt"))
-    Ranks.scan(tt, Seq(col(valCol)), Ranks.Sum("cnt"), Seq("cum"))._1
-      .withColumn(rankCol, (col("cum") - col("cnt")) * 2 + col("cnt") + 1)
-      .select(col(valCol), col(rankCol))
-  }
-
   private def assocQueries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // Spearman rank correlation between order price and the customer's
     // account balance — the robust monotone-association companion of
-    // a10's Pearson. Per variable: distinct-value type table + ONE
-    // prefix-sum pass recovers exact tie-averaged ranks in doubled-Long
-    // space, joined back to rows on the value (two keyed shuffles per
-    // variable — never a corpus row_number window); ρ is then Pearson on
-    // the doubled ranks with every moment and centred term exact
-    // (order-free), cast to double only for the final sqrt/divide.
+    // a10's Pearson. Both variables share ONE distinct-value type table:
+    // each row explodes to (var, value), one group-by counts the ties,
+    // and one Ranks.scan ordered by (var, value) carries each variable's
+    // own prefix count (Sum(cx, cy); the other variable's cells add 0).
+    // That recovers exact tie-averaged ranks in doubled-Long space
+    // (r2 = 2·(below) + cnt + 1), joined back to rows on each value —
+    // never a corpus row_number window; ρ is then Pearson on the doubled
+    // ranks with every moment and centred term exact (order-free), cast
+    // to double only for the final sqrt/divide.
     "stats_spearman" -> ((s, dir) => {
       val rows = Tables.orders(s, dir)
         .join(Tables.customer(s, dir)
           .select(col("c_custkey").as("o_custkey"),
             Num.cents(col("c_acctbal")).as("y")), "o_custkey")
         .select(Num.cents(col("o_totalprice")).as("x"), col("y"))
-      // the two rank-table builds each pay one prefix-sum collect job and
-      // are independent — build them concurrently (guide §2.6) so the
-      // second's job backfills the first's tail instead of queueing
-      val (cx, cy) = graft.Par.both(
-        doubledRankTable(rows, "x", "rx"),
-        doubledRankTable(rows, "y", "ry"))
-      val ranked = rows.join(cx, "x").join(cy, "y")
+      val tt = rows.select(explode(map(lit("x"), col("x"), lit("y"), col("y")))
+          .as(Seq("var", "value")))
+        .groupBy(col("var"), col("value")).agg(count(lit(1)).as("cnt"))
+        .withColumn("cx", when(col("var") === "x", col("cnt")).otherwise(0L))
+        .withColumn("cy", when(col("var") === "y", col("cnt")).otherwise(0L))
+      val (cum, _) = Ranks.scan(tt, Seq(col("var"), col("value")),
+        Ranks.Sum("cx", "cy"), Seq("cum_x", "cum_y"))
+      def ranks(v: String) = cum.filter(col("var") === v)
+        .select(col("value").as(v),
+          ((col(s"cum_$v") - col("cnt")) * 2 + col("cnt") + 1).as(s"r$v"))
+      val ranked = rows.join(ranks("x"), "x").join(ranks("y"), "y")
       val m = ranked.agg(
           count(lit(1)).as("n"),
           sum(col("rx").cast(Num.Exact)).as("sx"),

@@ -304,6 +304,13 @@ object Streams {
     runToTable(joined, spark, "graft_stream_join", "append", eventsBytes(sfDir))
   }
 
+  /** MD5 hex of `path`'s [[graft.Fingerprint.dir]] signature: a file-name
+    * key for on-disk caches built from that data. */
+  private def fingerprintDigest(path: String): String =
+    java.security.MessageDigest.getInstance("MD5")
+      .digest(graft.Fingerprint.dir(path).getBytes("UTF-8"))
+      .map("%02x".format(_)).mkString
+
   /** Stream-stream LEFT OUTER join under watermarks: like
     * [[clickPurchaseJoin]] but unmatched clicks must also surface (with a
     * null purchase) — which only happens when the watermark passes the
@@ -331,9 +338,7 @@ object Streams {
       tag: String, sentinelRows: Seq[(Long, Long, String)])
       : (java.nio.file.Path, java.nio.file.Path) = {
     import org.apache.spark.sql.types._
-    val fp = graft.Fingerprint.dir(s"$sfDir/events.parquet")
-    val digest = java.security.MessageDigest.getInstance("MD5")
-      .digest(fp.getBytes("UTF-8")).map("%02x".format(_)).mkString
+    val digest = fingerprintDigest(s"$sfDir/events.parquet")
     val cacheDir = java.nio.file.Paths.get(s"/tmp/graft_sentinels/${tag}_$digest")
     val s1 = cacheDir.resolve("sentinel.parquet")
     val s2 = cacheDir.resolve("sentinel2.parquet")
@@ -660,16 +665,16 @@ object Streams {
     * (the ensureBucketedTables discipline) — exposed so Bench warm-up
     * pre-pays the write and the timed run measures the stream. */
   def ensureDocDigestIndex(spark: SparkSession, sfDir: String): String = {
-    val idxPath = "/tmp/graft_sinks/doc_digest_index_" +
-      sfDir.replaceAll("[^A-Za-z0-9]", "_")
-    val fp = graft.Fingerprint.dir(s"$sfDir/documents.parquet")
-    if (!java.nio.file.Files.exists(java.nio.file.Paths.get(idxPath)) ||
-        spark.conf.getOption("graft.docidx.fp").forall(_ != fp)) {
+    // keyed by the documents' fingerprint digest (the sentinelFiles
+    // discipline): changed documents get a fresh directory, and a
+    // complete build is marked by the writer's _SUCCESS file
+    val digest = fingerprintDigest(s"$sfDir/documents.parquet")
+    val idxPath = s"/tmp/graft_sinks/doc_digest_index_$digest"
+    if (!java.nio.file.Files.exists(java.nio.file.Paths.get(idxPath, "_SUCCESS"))) {
       graft.Tables.documents(spark, sfDir)
         .filter(pmod(col("doc_id"), lit(7)) =!= 0)
         .select(md5(col("text")).as("digest")).distinct()
         .write.mode("overwrite").parquet(idxPath)
-      spark.conf.set("graft.docidx.fp", fp)
     }
     idxPath
   }

@@ -5,9 +5,10 @@ import java.sql.Timestamp
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Queries whose moment sums used to be LONG, on tiny fixtures in the
-  * tables' own schema whose sums pass 2⁶³: each answers exactly instead of
-  * wrapping. */
+/** Exact-moment queries on fixtures in the tables' own schema at the edge
+  * of their range: sums that pass 2⁶³ answer exactly instead of wrapping,
+  * and a count past a narrow cast raises, naming the query, instead of
+  * dropping the row. */
 class ExactMomentQueriesSpec extends SparkSuite {
   import spark.implicits._
 
@@ -81,5 +82,22 @@ class ExactMomentQueriesSpec extends SparkSuite {
     coef.zip(Seq(1e9, 1.0, 1e6)).foreach { case (c, e) =>
       assert(math.abs(c - e) <= 1e-6 * e, s"$c vs $e")
     }
+  }
+
+  test("stats_ar1_forecast: a user with 10^6 lag pairs raises instead of vanishing") {
+    val dir = tempDir()
+    // one user, 1,000,001 events: 10⁶ lag pairs, past the DECIMAL(6,0) n
+    writeTable(dir, "events", spark.range(1000001L).select(
+      col("id").as("event_id"),
+      timestamp_seconds(lit(1704153600L) + col("id")).as("ts"),
+      lit(1L).as("user_id"), lit("click").as("event_type"),
+      (pmod(col("id"), lit(97L)) + 1).cast("double").as("value"),
+      lit("{}").as("props")))
+    val e = try intercept[Exception](
+        SparkEntry.queries("stats_ar1_forecast")(spark, dir).collect())
+      finally org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
+    val msgs = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .flatMap(t => Option(t.getMessage)).mkString(" | ")
+    assert(msgs.contains("stats_ar1_forecast"), msgs)
   }
 }

@@ -29,10 +29,16 @@ class SessionSpec extends SparkSuite {
 
   test("loading a table leaves the caller's session confs as they were") {
     val s2 = foreign()
+    val before = s2.conf.getAll
     Tables.lineitem(s2, sf)
     assert(Tables.events(s2, sf).count() > 0)
     Tables.load(s2, sf, "customer")
+    // the st13/st15 digest index is memoised on disk, not in a conf
+    graft.streaming.Streams.ensureDocDigestIndex(s2, sf)
     assert(confs(s2) == Seq(Some("true"), Some("America/Sao_Paulo"), None))
+    val after = s2.conf.getAll
+    val changed = (after.toSet diff before.toSet) ++ (before.toSet diff after.toSet)
+    assert(changed.isEmpty, s"confs changed: $changed")
   }
 
   test("entry and queries pin the oracle-parity confs on a session they are handed") {
